@@ -20,11 +20,18 @@ so each task holds a few similar-size docs and the biggest documents
 land in the lowest partition ids — Spark schedules those first, the
 LPT heuristic — instead of a random partition straggling with several
 giants. Cost: one sampling pass over lengths for the range bounds.
+The 4× factor and the round-robin cut-off below were tuned while every
+Python task also paid about 0.2 s of worker set-up (re-reading
+pyspark.zip, see worker_daemon.py); with that charge gone, more and
+smaller tasks cost less than the tuning assumed, so both are due for
+re-measurement.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import functools
+import json
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 import pyspark.sql.functions as F
@@ -51,7 +58,8 @@ METADATA_COLS = [
 
 #: below this many docs per partition the range-partitioner's extra
 #: sampling pass dominates the win from size-aware placement (measured:
-#: −32% on the 553-doc corpus at local[32], r03 driver bench) — use
+#: −32% on the 553-doc corpus at local[32], r03 driver bench, taken
+#: while each Python task paid ~0.2 s of set-up) — use
 #: plain round-robin there. Above it (every real corpus) the LPT
 #: placement wins (2→8 scaling 0.61 → 0.76, r03 BENCH/BASELINE.md).
 SIZE_PARTITION_MIN_DOCS_PER_PART = 8
@@ -81,6 +89,55 @@ def _size_partitioned(
     )
 
 
+def _extract(
+    raw: DataFrame,
+    schema: StructType,
+    encode: Callable[[dict], object],
+    items_to_extract: list[str] | None,
+    remove_tables: bool,
+    include_signature: bool,
+    num_partitions: int | None,
+    n_docs: int | None,
+) -> DataFrame:
+    """The one per-row loop behind both record shapes: the kernel runs
+    per filing, ``encode`` turns its record into the third column of
+    ``schema`` (inside the per-doc ``try``, so an encode failure is that
+    doc's error too), and a filing whose items all came out empty gets a
+    null value and the ``all_items_null`` error."""
+    if num_partitions is None:
+        num_partitions = raw.sparkSession.sparkContext.defaultParallelism * 4
+    value_col = schema.fieldNames()[2]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        import sys
+
+        from edgar_crawler_spark.extract.extractor import extract_filing
+
+        sys.setrecursionlimit(30000)  # deep HTML (extract_items.py:22)
+        for pdf in batches:
+            out = {"filename": [], "filing_type": [], value_col: [], "error": []}
+            for row in pdf.to_dict("records"):
+                md = {c: row.get(c) for c in METADATA_COLS}
+                try:
+                    rec = extract_filing(
+                        row["content"],
+                        md,
+                        items_to_extract=items_to_extract,
+                        remove_tables=remove_tables,
+                        include_signature=include_signature,
+                    )
+                    out[value_col].append(encode(rec) if rec is not None else None)
+                    out["error"].append(None if rec is not None else "all_items_null")
+                except Exception as e:  # poisoned doc must not kill the job
+                    out[value_col].append(None)
+                    out["error"].append(f"{type(e).__name__}: {e}"[:500])
+                out["filename"].append(row.get("filename"))
+                out["filing_type"].append(row.get("Type"))
+            yield pd.DataFrame(out)
+
+    return _size_partitioned(raw, num_partitions, n_docs).mapInPandas(run, schema)
+
+
 def extract_records(
     raw: DataFrame,
     items_to_extract: list[str] | None = None,
@@ -92,37 +149,16 @@ def extract_records(
     """Run the extraction kernel over (content + metadata) rows.
     ``n_docs`` is an optional driver-known count hint for the adaptive
     partitioner (see :func:`_size_partitioned`)."""
-    if num_partitions is None:
-        num_partitions = raw.sparkSession.sparkContext.defaultParallelism * 4
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import sys
-
-        from edgar_crawler_spark.extract.extractor import extract_filing
-
-        sys.setrecursionlimit(30000)  # deep HTML (extract_items.py:22)
-        for pdf in batches:
-            out = {"filename": [], "filing_type": [], "items": [], "error": []}
-            for row in pdf.to_dict("records"):
-                md = {c: row.get(c) for c in METADATA_COLS}
-                try:
-                    rec = extract_filing(
-                        row["content"],
-                        md,
-                        items_to_extract=items_to_extract,
-                        remove_tables=remove_tables,
-                        include_signature=include_signature,
-                    )
-                    out["items"].append(rec if rec is not None else None)
-                    out["error"].append(None if rec is not None else "all_items_null")
-                except Exception as e:  # poisoned doc must not kill the job
-                    out["items"].append(None)
-                    out["error"].append(f"{type(e).__name__}: {e}"[:500])
-                out["filename"].append(row.get("filename"))
-                out["filing_type"].append(row.get("Type"))
-            yield pd.DataFrame(out)
-
-    return _size_partitioned(raw, num_partitions, n_docs).mapInPandas(run, RECORD_SCHEMA)
+    return _extract(
+        raw,
+        RECORD_SCHEMA,
+        lambda rec: rec,
+        items_to_extract,
+        remove_tables,
+        include_signature,
+        num_partitions,
+        n_docs,
+    )
 
 
 JSON_RECORD_SCHEMA = StructType(
@@ -152,42 +188,16 @@ def extract_json_records(
     in item-list order).  ``json`` is null when every item came out
     empty (the reference skips writing in that case,
     extract_items.py:1143-1145)."""
-    if num_partitions is None:
-        num_partitions = raw.sparkSession.sparkContext.defaultParallelism * 4
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import json
-        import sys
-
-        from edgar_crawler_spark.extract.extractor import extract_filing
-
-        sys.setrecursionlimit(30000)  # deep HTML (extract_items.py:22)
-        for pdf in batches:
-            out = {"filename": [], "filing_type": [], "json": [], "error": []}
-            for row in pdf.to_dict("records"):
-                md = {c: row.get(c) for c in METADATA_COLS}
-                try:
-                    rec = extract_filing(
-                        row["content"],
-                        md,
-                        items_to_extract=items_to_extract,
-                        remove_tables=remove_tables,
-                        include_signature=include_signature,
-                    )
-                    out["json"].append(
-                        json.dumps(rec, indent=4, ensure_ascii=False)
-                        if rec is not None
-                        else None
-                    )
-                    out["error"].append(None if rec is not None else "all_items_null")
-                except Exception as e:  # poisoned doc must not kill the job
-                    out["json"].append(None)
-                    out["error"].append(f"{type(e).__name__}: {e}"[:500])
-                out["filename"].append(row.get("filename"))
-                out["filing_type"].append(row.get("Type"))
-            yield pd.DataFrame(out)
-
-    return _size_partitioned(raw, num_partitions, n_docs).mapInPandas(run, JSON_RECORD_SCHEMA)
+    return _extract(
+        raw,
+        JSON_RECORD_SCHEMA,
+        functools.partial(json.dumps, indent=4, ensure_ascii=False),
+        items_to_extract,
+        remove_tables,
+        include_signature,
+        num_partitions,
+        n_docs,
+    )
 
 
 def items_long(records: DataFrame) -> DataFrame:

@@ -222,6 +222,10 @@ def main() -> None:
             logging_dir=args.logging_dir,
         )
 
+    # No spark.python.daemon.module here, unlike session.get_spark: a
+    # --py-files zip is on sys.path only inside a task, not when the
+    # executor starts the daemon, so on a cluster the daemon module
+    # (edgar_crawler_spark.worker_daemon) would fail to import.
     builder = SparkSession.builder.appName("edgar-crawler-spark")
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
