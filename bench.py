@@ -94,7 +94,7 @@ def bench_fetch_job(spark, n: int, n_hosts: int = 4096) -> dict:
     work = with_priority(with_url_identity(seed).withColumn("attempts_total", F.lit(0)))
     # decode/validate fused into the fetch pass: bytes cross the Arrow
     # boundary once, no second Python stage, no byte shuffle
-    fetched = fetch_wave(work, rate_per_host=10.0, virtual_clock=True, decode=True)
+    fetched = fetch_wave(work, rate_per_host=10.0, virtual_clock=True)
     validated = fetched.select(
         "canonical_url", "row_seq", "bytes", "caption", "w", "h", "fmt", "phash", "decode_ok"
     )

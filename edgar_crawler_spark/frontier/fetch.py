@@ -1,9 +1,9 @@
 """The fetch scheduler: per-host queues dispatched through token
-buckets inside ``groupBy(host).applyInPandas`` — one Arrow batch per
-host, the wave's only shuffle.
+buckets inside ``mapInPandas`` over a host-hash repartition — a host's
+queue streams through one task across Arrow batches.
 
-Design (SURVEY.md §4.3.1): after the salted host-hash repartition a
-host's queue lives entirely in one task, so the SEC 10-req/s budget is
+Design (SURVEY.md §4.3.1): after the host-hash repartition a host's
+queue lives entirely in one task, so the SEC 10-req/s budget is
 enforced by a plain in-process TokenBucket with no global coordinator.
 Rows are dispatched in host_rank order (the per-host priority queue);
 the reference's retry stack (urllib3 Retry total=5 backoff 0.2,
@@ -16,7 +16,12 @@ Fetchers are pluggable module-level callables:
   URL's accession (pure function of the row index; no network, no
   driver-side data). Deterministic failure injection exercises the
   retry + throttle paths.
-* ``http_fetcher`` — real requests+Retry, for clusters with network.
+* ``http_fetcher_factory(user_agent)`` — builds the real
+  requests+Retry fetcher, for clusters with network.
+
+Every fetched body is validated in the same pass
+(``functions.imaging.validate_payload``), so payload bytes cross the
+Arrow boundary once.
 
 Memory at 10^10 scale: a wave never carries a host's whole queue —
 the frontier loop caps each wave at ``host_rank <= quota`` first.
@@ -203,74 +208,52 @@ def fetch_wave(
     fetcher=stub_fetcher,
     rate_per_host: float = 10.0,
     virtual_clock: bool = True,
-    order_col: str = "host_rank",
-    num_partitions: int | None = None,
     robots_fetcher=None,
-    decode: bool = False,
 ) -> DataFrame:
     """Dispatch one wave. Input must carry host + host_rank (from
-    with_priority). Output = input columns + FETCH_RESULT_FIELDS
-    (+ the decode/validate columns when ``decode=True``).
+    with_priority). Output = input columns + FETCH_RESULT_FIELDS + the
+    validate columns (w/h/fmt/phash/decode_ok).
 
-    ``decode=True`` fuses payload validation (w/h/fmt/phash/decode_ok,
-    identical semantics to operators.multimodal.decode_and_validate)
-    into the fetch pass: the payload bytes cross the Arrow boundary
-    ONCE (UDF→JVM) instead of three times (out of fetch, into a decode
+    Payload validation is fused into the fetch pass (the same kernel
+    as operators.multimodal.decode_and_validate, null for rows that
+    were not fetched): the payload bytes cross the Arrow boundary ONCE
+    (UDF→JVM) instead of three times (out of fetch, into a decode
     stage, out again) and skip a full byte-shuffle — measured ~40%
     off the fetch+validate job at 400k URLs.
 
     Physical plan: project the 4 columns the scheduler needs (the
     Arrow boundary is priced per column × row — shipping the full
     metadata row through Python costs ~5× more than the fetch itself)
-    → explicit ``repartition(N, host)`` (a host never spans partitions,
-    and AQE does NOT coalesce an explicit repartition — the Python
-    fetch stage keeps full parallelism even though its shuffle input is
-    tiny) → ``sortWithinPartitions(host, rank)`` (a host's queue
-    arrives contiguous, in priority order) → ``mapInPandas`` with
-    per-host token buckets carried across Arrow batches (a giant host's
-    queue streams through; it is never materialized whole, unlike
+    → explicit ``repartition(2 × defaultParallelism, host)`` (a host
+    never spans partitions, and AQE does NOT coalesce an explicit
+    repartition — the Python fetch stage keeps full parallelism even
+    though its shuffle input is tiny) →
+    ``sortWithinPartitions(host, host_rank)`` (a host's queue arrives
+    contiguous, in priority order) → ``mapInPandas`` with per-host
+    token buckets carried across Arrow batches (a giant host's queue
+    streams through; it is never materialized whole, unlike
     groupBy().applyInPandas) → JVM-side hash join back onto the full
-    frontier row by url_hash."""
+    frontier row by (url_hash, canonical_url)."""
     from edgar_crawler_spark.operators.multimodal import VALIDATED_SCHEMA_FIELDS
 
-    extra_fields = list(VALIDATED_SCHEMA_FIELDS) if decode else []
-    in_fields = list(frontier.schema.fields)
-    out_schema = StructType(in_fields + FETCH_RESULT_FIELDS + extra_fields)
-    if num_partitions is None:
-        num_partitions = frontier.sparkSession.sparkContext.defaultParallelism * 2
+    out_schema = StructType(
+        list(frontier.schema.fields) + FETCH_RESULT_FIELDS + VALIDATED_SCHEMA_FIELDS
+    )
+    num_partitions = frontier.sparkSession.sparkContext.defaultParallelism * 2
     # the join-back key is the (hash, url) PAIR — submit() dedups on the
     # pair precisely so two distinct same-hash URLs can coexist in one
     # wave; joining on url_hash alone would cross-match them
     slim_schema = StructType(
         [frontier.schema["url_hash"], frontier.schema["canonical_url"]]
         + FETCH_RESULT_FIELDS
-        + extra_fields
+        + VALIDATED_SCHEMA_FIELDS
     )
+    validate_names = [f.name for f in VALIDATED_SCHEMA_FIELDS]
+    not_validated = (None,) * len(validate_names)
 
     def run(batches):
         from edgar_crawler_spark.frontier.politeness import RobotsGate
-
-        if decode:
-            from edgar_crawler_spark.functions.imaging import (
-                average_hash,
-                decode_image,
-                sniff_format,
-            )
-
-        def validate(body):
-            """Same row semantics as multimodal.decode_and_validate."""
-            try:
-                data = bytes(body)
-                px = decode_image(data)
-                return (
-                    px.shape[1],
-                    px.shape[0],
-                    sniff_format(data),
-                    average_hash(px),
-                    "ok",
-                )
-            except Exception as e:
-                return (None, None, None, None, type(e).__name__)
+        from edgar_crawler_spark.functions.imaging import validate_payload
 
         buckets: dict[str, object] = {}
         clocks: dict[str, object] = {}
@@ -301,11 +284,8 @@ def fetch_wave(
                 )
             return buckets[host], clocks[host]
 
-        decode_names = ["w", "h", "fmt", "phash", "decode_ok"] if decode else []
         for pdf in batches:
-            res = {f.name: [] for f in FETCH_RESULT_FIELDS}
-            for name in decode_names:
-                res[name] = []
+            res = {f.name: [] for f in FETCH_RESULT_FIELDS + VALIDATED_SCHEMA_FIELDS}
             for row in pdf.itertuples(index=False):
                 host = row.host
                 if gate is not None:
@@ -323,7 +303,7 @@ def fetch_wave(
                             ("caption", None), ("error", "robots_disallowed"),
                         ):
                             res[key].append(val)
-                        for name in decode_names:
+                        for name in validate_names:
                             res[name].append(None)
                         continue
                 bucket, clk = bucket_for(host)
@@ -340,14 +320,13 @@ def fetch_wave(
                 res["bytes"].append(body if state == "fetched" else None)
                 res["caption"].append(caption)
                 res["error"].append(err)
-                if decode:
-                    vals = (
-                        validate(body)
-                        if state == "fetched" and body is not None
-                        else (None, None, None, None, None)
-                    )
-                    for name, val in zip(decode_names, vals):
-                        res[name].append(val)
+                vals = (
+                    validate_payload(body)
+                    if state == "fetched" and body is not None
+                    else not_validated
+                )
+                for name, val in zip(validate_names, vals):
+                    res[name].append(val)
             out = pd.DataFrame(
                 {"url_hash": pdf["url_hash"], "canonical_url": pdf["canonical_url"]}
             )
@@ -355,9 +334,9 @@ def fetch_wave(
                 out[k] = pd.Series(v, dtype=object) if k == "bytes" else v
             yield out
 
-    slim = frontier.select("url_hash", "host", "canonical_url", order_col)
+    slim = frontier.select("url_hash", "host", "canonical_url", "host_rank")
     partitioned = slim.repartition(num_partitions, F.col("host")).sortWithinPartitions(
-        "host", order_col
+        "host", "host_rank"
     )
     results = partitioned.mapInPandas(run, slim_schema)
     # SHUFFLE_HASH, never broadcast: the results side carries payload

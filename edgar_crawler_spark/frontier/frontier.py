@@ -4,8 +4,9 @@ stages become a resumable dataflow).
 
 Wave dataflow (SURVEY.md §3 "Spark lifecycle"):
 
-    pending ──prioritize──► quota gate ──► fetch_wave (token-bucketed,
-      ▲                        │                per-host applyInPandas)
+    pending ──prioritize──► quota gate ──► fetch_wave (token-bucketed
+      ▲                        │                mapInPandas over a
+      │                        │                host-hash repartition)
       │                     deferred                  │
       └── retries(attempts<max) ∪ deferred ◄── split by state
                                              fetched → payload + log + seen
@@ -76,9 +77,7 @@ class CrawlFrontier:
         #   frontiers where host count × quota would explode
         robots_fetcher=None,  # robots.txt gate (north_rule; the reference
         #   has none) — callable(host) -> robots.txt text or None
-        use_bloom: bool = True,
         bloom_shards: int = 32,
-        filter_kind: str = "bloom",  # bloom | cuckoo (deletable)
         compact_every: int | None = None,  # auto-compact every K waves
     ):
         self.spark = spark
@@ -89,30 +88,20 @@ class CrawlFrontier:
         self.max_attempts = max_attempts
         self.max_wave_rows = max_wave_rows
         self.robots_fetcher = robots_fetcher
-        self.use_bloom = use_bloom
         self.bloom_shards = bloom_shards
-        self.filter_kind = filter_kind
         self.compact_every = compact_every
         self.seen = SnapshotTable(os.path.join(workdir, "seen"))
         self.pending = SnapshotTable(os.path.join(workdir, "pending"))
         self.log = SnapshotTable(os.path.join(workdir, "log"))
         self.payload = SnapshotTable(os.path.join(workdir, "payload"))
-        # incrementally-maintained pre-filter (VERDICT r01 item 3):
-        # per-wave cost = insert of the new hashes only; the seen
-        # parquet is scanned only on rebuild (overload / compaction).
-        # Both kinds share the update/read_filter/max_load/rebuild
-        # contract; cuckoo additionally supports delete (requeue path).
-        filter_snapshot = SnapshotTable(os.path.join(workdir, "seenfilter"))
-        if filter_kind == "cuckoo":
-            from edgar_crawler_spark.frontier.cuckoo import PersistedCuckooTable
-
-            self.seen_filter = PersistedCuckooTable(
-                filter_snapshot, num_shards=bloom_shards
-            )
-        else:
-            self.seen_filter = PersistedBloomTable(
-                filter_snapshot, num_shards=bloom_shards
-            )
+        # incrementally-maintained Bloom pre-filter (VERDICT r01 item
+        # 3): per-wave cost = insert of the new hashes only; the seen
+        # parquet is scanned only on rebuild (overload / compaction /
+        # invalidate).
+        self.seen_filter = PersistedBloomTable(
+            SnapshotTable(os.path.join(workdir, "seenfilter")),
+            num_shards=bloom_shards,
+        )
         self.metrics: list[dict] = []
         self._recover()
 
@@ -134,13 +123,12 @@ class CrawlFrontier:
                     metrics={"recovered_partial_wave": last["version"]},
                 )
 
-    def _bloom_prefilter(self, seen_df: DataFrame):
+    def _bloom_prefilter(self, seen_df: DataFrame) -> BloomFilterTable:
         """The candidate pre-filter: the persisted filter table (read,
-        never rebuilt on the submit path), or None when disabled."""
-        if not self.use_bloom:
-            return None
+        never rebuilt on the submit path except to migrate a workdir
+        that has a seen table but no filter yet)."""
         pf = self.seen_filter.read_filter(self.spark)
-        if pf is None and seen_df is not None:
+        if pf is None:
             # migration path: seen exists but no filter table yet —
             # one full build, then incremental forever after
             self.seen_filter.rebuild(
@@ -163,21 +151,20 @@ class CrawlFrontier:
         n = rows.count()
         if n:
             # filter before seen: preserves the filter ⊇ seen invariant
-            if self.use_bloom:
-                self.seen_filter.update(rows, metrics={"bootstrap": n})
+            self.seen_filter.update(rows, metrics={"bootstrap": n})
             self.seen.append(rows, metrics={"bootstrap": n})
         return n
 
     def invalidate(self, urls: DataFrame, url_col: str = "html_index") -> int:
         """Remove URLs from the seen set so they can be re-crawled
         (content invalidated / requeue). Seen is rewritten without the
-        rows FIRST (keeps filter ⊇ seen through a crash: the stale
-        fingerprint is a harmless false positive), then the cuckoo
-        filter deletes their fingerprints so the filter tracks seen
-        exactly — the Bloom kind simply keeps the stale bits (extra FP
-        cost, same correctness via the exact recheck). Administrative
-        op: the seen rewrite is a full-table commit — batch
-        invalidations, don't loop them."""
+        rows FIRST, then the Bloom filter is rebuilt from the rewritten
+        seen table at its current capacity, so the filter tracks seen
+        exactly again. The order keeps filter ⊇ seen through a crash:
+        until the rebuild commits, the old filter covers the old seen
+        set, which covers the new one (the stale bits are harmless
+        false positives). Administrative op: both rewrites are
+        full-table commits — batch invalidations, don't loop them."""
         ids = (
             with_url_identity(urls, url_col)
             .select("url_hash", "canonical_url")
@@ -197,8 +184,11 @@ class CrawlFrontier:
                 ids, on=["url_hash", "canonical_url"], how="left_anti"
             )
             self.seen.overwrite(remaining, metrics={"invalidated": n})
-            if self.use_bloom and hasattr(self.seen_filter, "delete"):
-                self.seen_filter.delete(ids, metrics={"invalidated": n})
+            self.seen_filter.rebuild(
+                self.seen.read(self.spark),
+                expected_per_shard=self.seen_filter.expected_per_shard,
+                metrics={"invalidated": n},
+            )
         ids.unpersist()
         return n
 
@@ -249,12 +239,9 @@ class CrawlFrontier:
             return None
         seen_df = self.seen.read(self.spark)
         if seen_df is not None:
-            bloom = (
-                self.seen_filter.read_filter(self.spark)
-                if self.use_bloom
-                else None
+            pending = url_seen_anti_join(
+                pending, seen_df, bloom=self.seen_filter.read_filter(self.spark)
             )
-            pending = url_seen_anti_join(pending, seen_df, bloom=bloom)
         return pending
 
     def _dispatch_predicate(self, work: DataFrame):
@@ -348,7 +335,6 @@ class CrawlFrontier:
             rate_per_host=self.rate_per_host,
             virtual_clock=self.virtual_clock,
             robots_fetcher=self.robots_fetcher,
-            decode=True,  # fused validate: bytes cross Arrow once
         ).persist()
         # ONE materializing job yields dispatch total AND per-state
         # counts (previously a count() plus a separate groupBy job)
@@ -435,19 +421,16 @@ class CrawlFrontier:
                     payload_rows,
                     {"wave": wave_no, "commit_token": commit_token},
                 ),
+                # the filter OR-in only has to land BEFORE seen (filter
+                # ⊇ seen invariant) — it is independent of log/payload,
+                # so it runs concurrently with them; it touches only the
+                # bitset table, never the seen parquet
+                pool.submit(
+                    self.seen_filter.update,
+                    new_seen,
+                    metrics={"wave": wave_no, "commit_token": commit_token},
+                ),
             ]
-            # the filter OR-in only has to land BEFORE seen (filter ⊇
-            # seen invariant) — it is independent of log/payload, so it
-            # runs concurrently with them; it touches only the bitset
-            # table, never the seen parquet
-            if self.use_bloom:
-                futures.append(
-                    pool.submit(
-                        self.seen_filter.update,
-                        new_seen,
-                        metrics={"wave": wave_no, "commit_token": commit_token},
-                    )
-                )
             for fut in futures:
                 fut.result()  # barrier; re-raises any commit failure
         self.seen.append(
@@ -634,11 +617,7 @@ class CrawlFrontier:
         # the one sanctioned full-scan filter rebuild: only when shards
         # have outgrown their sized capacity (fpp decay), amortized
         # into the compaction pass
-        if (
-            self.use_bloom
-            and self.filter_kind == "bloom"
-            and self.seen_filter.max_load(self.spark) > 1.0
-        ):
+        if self.seen_filter.max_load(self.spark) > 1.0:
             seen_df = self.seen.read(self.spark)
             if seen_df is not None:
                 self.seen_filter.rebuild(seen_df, metrics={"compaction": True})

@@ -149,25 +149,6 @@ class BloomFilterTable:
         return cand_g.cogroup(bloom_g).applyInPandas(check, out_schema)
 
 
-def guard_shard_count(table, configured: int) -> None:
-    """Validate the configured shard count against the one persisted in
-    the filter table's manifest metrics (ADVICE r02). Routing candidates
-    with a different ``num_shards`` than the bitsets were built with
-    checks hashes against the WRONG shard — silent false negatives, so
-    already-fetched URLs skip the exact recheck and are re-admitted.
-    Fail loudly instead; ``rebuild()`` is the legitimate way to change
-    the shard count (it rewrites every bitset from the seen table).
-    Tables written before this guard have no stamp — first write adds it."""
-    stored = (table.latest_manifest().get("metrics") or {}).get("num_shards")
-    if stored is not None and int(stored) != int(configured):
-        raise ValueError(
-            f"persisted filter at {getattr(table, 'root', '?')} was built "
-            f"with num_shards={stored} but this instance is configured "
-            f"with num_shards={configured}; construct with the stored "
-            "value or rebuild() the filter"
-        )
-
-
 class PersistedBloomTable:
     """Incrementally-maintained Bloom filter: shard bitsets persisted
     in a :class:`SnapshotTable`, OR-updated with ONLY the new hashes at
@@ -186,6 +167,9 @@ class PersistedBloomTable:
       shard's n_items exceeds its sized capacity the fpp decays, so
       ``max_load`` > 1 signals a ``rebuild`` (full scan, rare,
       amortized — e.g. at compaction time).
+    * no deletes — a Bloom bit cannot be cleared, so removing URLs from
+      seen (``CrawlFrontier.invalidate``) rebuilds the bitsets from the
+      rewritten seen table.
     """
 
     def __init__(
@@ -200,8 +184,27 @@ class PersistedBloomTable:
         self.expected_per_shard = expected_per_shard
         self.fpp = fpp
 
+    def _guard_shard_count(self) -> None:
+        """Validate the configured shard count against the one persisted
+        in the filter table's manifest metrics (ADVICE r02). Routing
+        candidates with a different ``num_shards`` than the bitsets were
+        built with checks hashes against the WRONG shard — silent false
+        negatives, so already-fetched URLs skip the exact recheck and are
+        re-admitted. Fail loudly instead; ``rebuild()`` is the legitimate
+        way to change the shard count (it rewrites every bitset from the
+        seen table). Tables written before this guard have no stamp —
+        first write adds it."""
+        stored = (self.table.latest_manifest().get("metrics") or {}).get("num_shards")
+        if stored is not None and int(stored) != int(self.num_shards):
+            raise ValueError(
+                f"persisted filter at {self.table.root} was "
+                f"built with num_shards={stored} but this instance is "
+                f"configured with num_shards={self.num_shards}; construct "
+                "with the stored value or rebuild() the filter"
+            )
+
     def read_filter(self, spark: SparkSession) -> BloomFilterTable | None:
-        guard_shard_count(self.table, self.num_shards)
+        self._guard_shard_count()
         df = self.table.read(spark)
         return BloomFilterTable(df, self.num_shards) if df is not None else None
 
@@ -215,7 +218,7 @@ class PersistedBloomTable:
         """OR the new hashes into the persisted bitsets. Touches only
         the filter table (KBs–GBs of bitsets), never the seen parquet.
         Untouched shards are carried through the cogroup unchanged."""
-        guard_shard_count(self.table, self.num_shards)
+        self._guard_shard_count()
         spark = new.sparkSession
         cur = self.table.read(spark)
         m0, k0 = _params(self.expected_per_shard, self.fpp)
@@ -280,10 +283,12 @@ class PersistedBloomTable:
         metrics: dict | None = None,
     ) -> int:
         """Full rebuild from the seen table (the ONLY path that scans
-        it) — run on overload or at compaction, not per wave. New
-        capacity is sized from the actual item count with 2× headroom
-        (the rebuild scans seen anyway, so the count is free), floored
-        at double the current size so rebuilds amortize geometrically."""
+        it) — run on overload or at compaction, and after an
+        invalidation, never per wave. Without ``expected_per_shard``
+        the new capacity is sized from the actual item count with 2×
+        headroom (the rebuild scans seen anyway, so the count is free),
+        floored at double the current size so rebuilds amortize
+        geometrically; pass the current capacity to keep the geometry."""
         if expected_per_shard is not None:
             self.expected_per_shard = expected_per_shard
         else:

@@ -814,3 +814,16 @@ def average_hash(pixels: np.ndarray) -> int:
     for bit in bits:
         v = (v << 1) | int(bit)
     return v - (1 << 64) if v >= (1 << 63) else v
+
+
+def validate_payload(data) -> tuple:
+    """The per-row payload validation kernel: ``(w, h, fmt, phash,
+    decode_ok)`` of one image blob. A blob that fails to decode yields
+    null metrics and its exception class name as ``decode_ok`` — never
+    a raise, so a poisoned blob cannot kill the task."""
+    try:
+        data = bytes(data)
+        px = decode_image(data)
+        return px.shape[1], px.shape[0], sniff_format(data), average_hash(px), "ok"
+    except Exception as e:
+        return None, None, None, None, type(e).__name__

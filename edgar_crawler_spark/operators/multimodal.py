@@ -64,32 +64,14 @@ def decode_and_validate(
     df = df.repartition(num_partitions)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from edgar_crawler_spark.functions.imaging import (
-            average_hash,
-            decode_image,
-            sniff_format,
-        )
+        from edgar_crawler_spark.functions.imaging import validate_payload
 
+        names = [f.name for f in VALIDATED_SCHEMA_FIELDS]
         for pdf in batches:
-            rows = {"w": [], "h": [], "fmt": [], "phash": [], "decode_ok": []}
-            for data in pdf[bytes_col]:
-                try:
-                    data = bytes(data)
-                    px = decode_image(data)
-                    rows["w"].append(px.shape[1])
-                    rows["h"].append(px.shape[0])
-                    rows["fmt"].append(sniff_format(data))
-                    rows["phash"].append(average_hash(px))
-                    rows["decode_ok"].append("ok")
-                except Exception as e:
-                    rows["w"].append(None)
-                    rows["h"].append(None)
-                    rows["fmt"].append(None)
-                    rows["phash"].append(None)
-                    rows["decode_ok"].append(type(e).__name__)
+            vals = [validate_payload(data) for data in pdf[bytes_col]]
             out = pdf[keep].copy()
-            for k, v in rows.items():
-                out[k] = v
+            for i, name in enumerate(names):
+                out[name] = [v[i] for v in vals]
             yield out
 
     return df.mapInPandas(run, out_schema)

@@ -14,6 +14,23 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+MAX_DRIVER_MEMORY_MB = 16 * 1024
+
+
+def default_driver_memory() -> str:
+    """A quarter of the host's ``MemTotal``, capped at 16g; 16g when
+    ``/proc/meminfo`` is absent. The driver shares the host with the
+    Python workers, so a heap near the host's size gets the JVM
+    OOM-killed."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    quarter_mb = int(line.split()[1]) // 4 // 1024
+                    return f"{min(quarter_mb, MAX_DRIVER_MEMORY_MB)}m"
+    except OSError:
+        pass
+    return f"{MAX_DRIVER_MEMORY_MB}m"
 
 
 def get_spark(
@@ -25,6 +42,8 @@ def get_spark(
     """Build (or fetch) the session.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
+    The driver heap is ``$SPARK_GRAFT_DRIVER_MEM`` when set, else
+    :func:`default_driver_memory`.
     On a real cluster these settings ride along unchanged; nothing here
     is local-mode-specific except the master URL itself.
     """
@@ -50,7 +69,10 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Keep scan splits big enough to amortize task overhead at scale.
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.session.timeZone", "UTC")

@@ -75,13 +75,6 @@ def main() -> None:
         "a wave carry quota × n_hosts rows); excess defers by priority",
     )
     ap.add_argument(
-        "--seen-filter",
-        choices=["bloom", "cuckoo"],
-        default="bloom",
-        help="URL-seen pre-filter kind: incremental Bloom (default) or "
-        "deletable cuckoo (supports invalidate/requeue)",
-    )
-    ap.add_argument(
         "--compact-every",
         type=int,
         default=None,
@@ -314,7 +307,6 @@ def main() -> None:
         wave_quota=args.wave_quota,
         max_wave_rows=args.max_wave_rows,
         robots_fetcher=robots_fetcher,
-        filter_kind=args.seen_filter,
         compact_every=args.compact_every,
     )
     report: dict = {}

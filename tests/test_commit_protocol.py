@@ -11,6 +11,7 @@ from edgar_crawler_spark.frontier import seen as seen_mod
 from edgar_crawler_spark.frontier.fetch import fetch_wave
 from edgar_crawler_spark.frontier.frontier import CrawlFrontier
 from edgar_crawler_spark.frontier.state import SnapshotTable
+from edgar_crawler_spark.functions.imaging import average_hash, decode_image
 
 N = 200
 
@@ -195,6 +196,11 @@ def test_fetch_joinback_same_hash_distinct_urls(spark):
     for i in (1, 2):
         url = f"https://www.sec.gov/Archives/edgar/data/{i}/00000000{i:02d}-22-00000{i}-index.html"
         assert by_url.loc[url, "caption"] == make_payload_row(i)["caption"]
+        # validation is fused into the fetch: decode_and_validate semantics
+        assert by_url.loc[url, "decode_ok"] == "ok"
+        assert by_url.loc[url, "phash"] == average_hash(
+            decode_image(make_payload_row(i)["bytes"])
+        )
 
 
 def test_fetch_error_cleared_on_successful_retry(spark):

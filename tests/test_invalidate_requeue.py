@@ -1,8 +1,8 @@
-"""The invalidate/requeue path — the use case for the DELETABLE cuckoo
-filter: drop URLs from the seen set, re-submit, re-crawl exactly those."""
+"""The invalidate/requeue path: drop URLs from the seen set, re-submit,
+re-crawl exactly those; the Bloom filter is rebuilt from the rewritten
+seen table, so it tracks seen exactly."""
 
 import pyspark.sql.functions as F
-import pytest
 
 from edgar_crawler_spark.fixtures.seed_index import seed_index_df
 from edgar_crawler_spark.frontier.frontier import CrawlFrontier
@@ -10,9 +10,12 @@ from edgar_crawler_spark.frontier.frontier import CrawlFrontier
 N = 120
 
 
-@pytest.mark.parametrize("kind", ["cuckoo", "bloom"])
-def test_invalidate_then_resubmit_recrawls_exactly(spark, tmp_path, kind):
-    fr = CrawlFrontier(spark, str(tmp_path / kind), filter_kind=kind)
+def _filter_items(fr, spark):
+    return fr.seen_filter.table.read(spark).agg(F.sum("n_items").alias("s")).first()["s"]
+
+
+def test_invalidate_then_resubmit_recrawls_exactly(spark, tmp_path):
+    fr = CrawlFrontier(spark, str(tmp_path / "wd"))
     seed = seed_index_df(spark, N)
     assert fr.submit(seed) == N
     fr.run()
@@ -22,6 +25,8 @@ def test_invalidate_then_resubmit_recrawls_exactly(spark, tmp_path, kind):
     n_stale = stale.count()
     assert fr.invalidate(stale) == n_stale
     assert fr.seen_set().count() == N - n_stale
+    # the rebuilt filter counts exactly the seen rows (no stale items)
+    assert _filter_items(fr, spark) == fr.seen_set().count()
     # idempotent: invalidating the same rows again removes nothing
     assert fr.invalidate(stale) == 0
 
@@ -36,18 +41,3 @@ def test_invalidate_then_resubmit_recrawls_exactly(spark, tmp_path, kind):
     pf = fr.seen_filter.read_filter(spark)
     flagged = pf.maybe_contains(fr.seen_set().select("url_hash"))
     assert flagged.filter(~F.col("bloom_maybe_seen")).count() == 0
-
-
-def test_cuckoo_delete_shrinks_item_count(spark, tmp_path):
-    fr = CrawlFrontier(spark, str(tmp_path / "wd"), filter_kind="cuckoo")
-    seed = seed_index_df(spark, N)
-    fr.submit(seed)
-    fr.run()
-    before = (
-        fr.seen_filter.table.read(spark).agg(F.sum("n_items").alias("s")).first()["s"]
-    )
-    fr.invalidate(seed.filter(F.col("row_seq") < 20))
-    after = (
-        fr.seen_filter.table.read(spark).agg(F.sum("n_items").alias("s")).first()["s"]
-    )
-    assert before - after == 20  # fingerprints really removed

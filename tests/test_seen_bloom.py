@@ -63,26 +63,24 @@ def test_persisted_filter_shard_count_guard(spark, tmp_path):
     way to change the shard count."""
     import pytest
 
-    from edgar_crawler_spark.frontier.cuckoo import PersistedCuckooTable
     from edgar_crawler_spark.frontier.seen import PersistedBloomTable
     from edgar_crawler_spark.frontier.state import SnapshotTable
 
     hashes = spark.range(500).selectExpr("xxhash64(cast(id as string)) AS url_hash")
 
-    for cls, sub in ((PersistedBloomTable, "b"), (PersistedCuckooTable, "c")):
-        tbl = SnapshotTable(str(tmp_path / sub))
-        filt = cls(tbl, num_shards=32)
-        filt.update(hashes)
-        # same shard count resumes fine
-        assert cls(tbl, num_shards=32).read_filter(spark) is not None
-        # drifted shard count fails loudly on both read and write paths
-        drifted = cls(tbl, num_shards=16)
-        with pytest.raises(ValueError, match="num_shards"):
-            drifted.read_filter(spark)
-        with pytest.raises(ValueError, match="num_shards"):
-            drifted.update(hashes)
-        # rebuild rewrites every bitset from seen → new count is stamped
-        drifted.rebuild(hashes)
-        assert drifted.read_filter(spark) is not None
-        with pytest.raises(ValueError, match="num_shards"):
-            cls(tbl, num_shards=32).read_filter(spark)
+    tbl = SnapshotTable(str(tmp_path / "b"))
+    filt = PersistedBloomTable(tbl, num_shards=32)
+    filt.update(hashes)
+    # same shard count resumes fine
+    assert PersistedBloomTable(tbl, num_shards=32).read_filter(spark) is not None
+    # drifted shard count fails loudly on both read and write paths
+    drifted = PersistedBloomTable(tbl, num_shards=16)
+    with pytest.raises(ValueError, match="num_shards"):
+        drifted.read_filter(spark)
+    with pytest.raises(ValueError, match="num_shards"):
+        drifted.update(hashes)
+    # rebuild rewrites every bitset from seen → new count is stamped
+    drifted.rebuild(hashes)
+    assert drifted.read_filter(spark) is not None
+    with pytest.raises(ValueError, match="num_shards"):
+        PersistedBloomTable(tbl, num_shards=32).read_filter(spark)

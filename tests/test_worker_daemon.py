@@ -1,9 +1,11 @@
 """The worker daemon's zipimport guard: an unchanged archive is read once
 per importer however often ``importlib.invalidate_caches()`` runs, a
 rewritten archive is read again, and ``get_spark`` sessions fork their
-Python workers from the daemon."""
+Python workers from the daemon (and size the driver heap from the
+host's memory)."""
 
 import importlib
+import os
 import sys
 import zipfile
 import zipimport
@@ -109,3 +111,8 @@ def test_get_spark_workers_run_under_the_daemon(spark):
     assert [r["main"] for r in rows] == ["edgar_crawler_spark.worker_daemon"]
     if GUARDED:
         assert [r["guard"] for r in rows] == ["edgar_crawler_spark.worker_daemon"]
+    if "SPARK_GRAFT_DRIVER_MEM" not in os.environ and os.path.exists("/proc/meminfo"):
+        with open("/proc/meminfo") as f:
+            mem_kib = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+        heap = spark.sparkContext.getConf().get("spark.driver.memory")
+        assert heap.endswith("m") and int(heap[:-1]) * 1024 <= mem_kib / 4
