@@ -28,7 +28,8 @@ Crash safety — the wave commit protocol (ADVICE r01, high):
                           adds harmless false-positive bits)
     3. seen               append, same token — THE commit that gates
                           re-dispatch
-    4. pending            overwrite
+    4. pending            overwrite, stamped ``seen_version`` = the
+                          version step 3 returned
 
 A crash inside 1–2 leaves log/payload snapshots whose token never
 reached seen; ``_recover()`` (run at construction) rolls those tables
@@ -36,6 +37,15 @@ back one snapshot — an O(1) manifest operation — and the still-intact
 pending rows are re-fetched cleanly. A crash inside 3–4 leaves stale
 pending rows that the next wave's exact seen-anti-join drops before
 dispatch. Either way: no duplicate log/payload rows, no lost URLs.
+
+The ``seen_version`` stamp in a pending manifest names the seen
+version its rows are known to be disjoint from (``submit`` stamps the
+version it filtered against, the wave commit the version of its own
+seen append). A wave re-filters pending against seen only when the
+stamp differs from seen's current version: after the 3–4 crash above,
+after ``invalidate``/``compact``/``bootstrap_seen`` (each commits a new
+seen version), or for an unstamped snapshot. A pending table ``submit``
+has just filtered is not filtered again.
 """
 
 from __future__ import annotations
@@ -198,22 +208,32 @@ class CrawlFrontier:
         rest to the pending frontier. Returns rows admitted."""
         cand = with_url_identity(seed, url_col).withColumn("attempts_total", F.lit(0))
         cand = cand.dropDuplicates(["url_hash", "canonical_url"])
-        seen_df = self.seen.read(self.spark)
+        seen_v = self.seen.current_version()
+        seen_df = self.seen.read(self.spark, seen_v)
         if seen_df is not None:
             cand = url_seen_anti_join(
                 cand, seen_df, bloom=self._bloom_prefilter(seen_df)
             )
-        prev = self.pending.read(self.spark)
+        prev_m = self.pending.latest_manifest()
+        prev = self.pending.read(self.spark, prev_m["version"])
         if prev is not None:
+            # the select keeps the column order of the rows already
+            # pending (a join on key names moves the keys first), so
+            # the append keeps pending's recorded schema
             cand = cand.join(
                 prev.select("url_hash", "canonical_url").dropDuplicates(),
                 on=["url_hash", "canonical_url"],
                 how="left_anti",
-            )
+            ).select(cand.columns)
         cand = cand.persist()
         n = cand.count()
         if n:
-            self.pending.append(cand, metrics={"admitted": n})
+            m = {"admitted": n}
+            # the appended snapshot is disjoint from seen_v only if the
+            # rows already pending were too
+            if not prev_m["version"] or self._seen_stamp(prev_m) == seen_v:
+                m["seen_version"] = seen_v
+            self.pending.append(cand, metrics=m)
         cand.unpersist()
         return n
 
@@ -227,22 +247,40 @@ class CrawlFrontier:
             F.lit("failed"),
         ).otherwise(F.col("state"))
 
+    @staticmethod
+    def _seen_stamp(manifest: dict) -> int | None:
+        """The seen version a pending snapshot is disjoint from (None
+        when unstamped)."""
+        return (manifest.get("metrics") or {}).get("seen_version")
+
     def _refiltered_pending(self) -> DataFrame | None:
-        """Read the pending table and re-filter vs seen — makes
+        """Read the pending table and re-filter vs seen unless its
+        ``seen_version`` stamp is seen's current version — makes
         crash-recovery idempotent. The persisted Bloom pre-filter keeps
         this exact (maybe → exact recheck) while the definitely-new
         bulk skips the seen scan; filter ⊇ seen (commit protocol step
         2-before-3) guarantees no false negative can re-admit a
         fetched URL."""
-        pending = self.pending.read(self.spark)
+        pm = self.pending.latest_manifest()
+        pending = self.pending.read(self.spark, pm["version"])
         if pending is None:
             return None
-        seen_df = self.seen.read(self.spark)
+        seen_v = self.seen.current_version()
+        if self._seen_stamp(pm) == seen_v:
+            return pending
+        seen_df = self.seen.read(self.spark, seen_v)
         if seen_df is not None:
             pending = url_seen_anti_join(
                 pending, seen_df, bloom=self.seen_filter.read_filter(self.spark)
             )
         return pending
+
+    def _clear_pending(self, deferred: DataFrame) -> None:
+        """Overwrite pending with the undispatched rows of a wave that
+        fetched nothing; they were filtered against the current seen."""
+        self.pending.overwrite(
+            deferred, metrics={"seen_version": self.seen.current_version()}
+        )
 
     def _dispatch_predicate(self, work: DataFrame):
         """The wave-membership predicate over the prioritized frontier.
@@ -433,10 +471,12 @@ class CrawlFrontier:
             ]
             for fut in futures:
                 fut.result()  # barrier; re-raises any commit failure
-        self.seen.append(
+        seen_v = self.seen.append(
             new_seen, metrics={"wave": wave_no, "commit_token": commit_token}
         )
-        self.pending.overwrite(ctx["next_pending"], metrics={"wave": wave_no})
+        self.pending.overwrite(
+            ctx["next_pending"], metrics={"wave": wave_no, "seen_version": seen_v}
+        )
 
         m = {
             "wave": wave_no,
@@ -463,7 +503,7 @@ class CrawlFrontier:
             ctx["results"].unpersist()
             # unconditional: an empty deferred set must still clear the
             # stale pending snapshot (ADVICE r01 nit)
-            self.pending.overwrite(ctx["deferred"])
+            self._clear_pending(ctx["deferred"])
             ctx["work"].unpersist()
             return None
         m = self._commit_phase(len(self.metrics) + 1, ctx)
@@ -542,7 +582,11 @@ class CrawlFrontier:
                     if self.compact_every and out[-1]["wave"] % self.compact_every == 0:
                         self.compact()
                 if ctx["n_dispatched"] == 0:
-                    self.pending.overwrite(ctx["deferred"])
+                    # a committed wave already wrote this (empty)
+                    # remainder; only a run that committed nothing still
+                    # has stale re-filtered rows to clear
+                    if not out:
+                        self._clear_pending(ctx["deferred"])
                     ctx["results"].unpersist()
                     ctx["work"].unpersist()
                     commit_fut, prev_ctx = None, None

@@ -17,7 +17,8 @@ filter in front:
 * FP SAFETY — Bloom "no" ⇒ definitely-new, emitted directly; Bloom
   "maybe" ⇒ exact anti-join recheck against the seen table. A false
   positive therefore costs one extra join probe and can never silently
-  drop a new URL (SURVEY.md §4.3.2).
+  drop a new URL (SURVEY.md §4.3.2). Both branches read one
+  materialized probe result, so each candidate is probed once.
 
 Double hashing (Kirsch-Mitzenmacher): h_i = h1 + i·h2 mod m with h1/h2
 carved from the single xxhash64 value, so the JVM computes the only
@@ -321,11 +322,18 @@ def url_seen_anti_join(
 
     Joins on (hash, url) pair so a 64-bit hash collision can never
     drop a genuinely-new URL.
+
+    The Bloom-flagged frame feeds both the definitely-new and the
+    suspect branch, so it is materialized once (a lazy local
+    checkpoint): the pandas probe runs once per candidate row instead
+    of once per branch. The probe is deterministic, so a lost
+    checkpoint block fails the job loudly and can never change the
+    result.
     """
     seen_keys = seen.select(key, url_col).dropDuplicates([key, url_col])
     if bloom is None:
         return new.join(seen_keys, on=[key, url_col], how="left_anti")
-    flagged = bloom.maybe_contains(new, hash_col=key)
+    flagged = bloom.maybe_contains(new, hash_col=key).localCheckpoint(eager=False)
     definitely_new = flagged.filter(~F.col("bloom_maybe_seen")).drop("bloom_maybe_seen")
     suspects = flagged.filter(F.col("bloom_maybe_seen")).drop("bloom_maybe_seen")
     rechecked = suspects.join(seen_keys, on=[key, url_col], how="left_anti")

@@ -13,6 +13,14 @@ needs, with the same guarantees:
   the full file list, parent pointer, per-commit metrics and lineage;
   resuming = reading LATEST (kill-and-resume safe).
 * time travel      — ``read(version=k)`` reads any retained snapshot.
+* schema on read   — each manifest records the schema its files share
+  (the written ``df.schema`` as parquet reads it back, all fields
+  nullable; an append keeps it only if it equals the parent's,
+  otherwise records none; a rollback restores it). ``read`` and
+  ``read_since`` hand a recorded schema to the parquet reader, so a
+  read starts no schema-inference job; with none recorded (mixed-schema
+  append chains, manifests written before the schema was recorded) the
+  reader infers it as before.
 
 On a real cluster, swap this class for ``spark.table("catalog.db.t")``
 with Iceberg's own commit protocol; every call site uses only
@@ -27,7 +35,22 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
+
+
+def _as_read(dt: DataType) -> DataType:
+    """``dt`` with every field, element and value nullable — the form
+    Spark gives any schema it reads from parquet, so two writes that
+    differ only in nullability record the same schema."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _as_read(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_read(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_read(dt.keyType), _as_read(dt.valueType), True)
+    return dt
 
 
 class SnapshotTable:
@@ -54,9 +77,16 @@ class SnapshotTable:
         with open(os.path.join(self._snap_dir, f"v{version:06d}.json")) as f:
             return json.load(f)
 
-    def _commit(self, files: list[str], mode: str, metrics: dict, lineage: dict) -> int:
+    def _commit(
+        self, files: list[str], mode: str, metrics: dict, lineage: dict, schema: str | None
+    ) -> int:
         parent = self.current_version()
-        prev = self._manifest(parent)["files"] if mode == "append" else []
+        prev = []
+        if mode == "append":
+            pm = self._manifest(parent)
+            prev = pm["files"]
+            if prev and pm.get("schema") != schema:
+                schema = None  # the files no longer share one schema
         version = parent + 1
         manifest = {
             "version": version,
@@ -65,6 +95,7 @@ class SnapshotTable:
             "files": prev + files,
             "metrics": metrics,
             "lineage": lineage,
+            "schema": schema,
             "ts": time.time(),
         }
         mpath = os.path.join(self._snap_dir, f"v{version:06d}.json")
@@ -110,15 +141,25 @@ class SnapshotTable:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)
         m = dict(metrics or {})
-        return self._commit([rel], mode, m, lineage or {})
+        return self._commit([rel], mode, m, lineage or {}, _as_read(df.schema).json())
+
+    @staticmethod
+    def _reader(spark: SparkSession, schema: str | None):
+        """A parquet reader that takes a recorded schema instead of
+        inferring one (inference is a Spark job per read)."""
+        if schema is None:
+            return spark.read
+        return spark.read.schema(StructType.fromJson(json.loads(schema)))
 
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame | None:
         """None when the table has no committed snapshot yet."""
         v = self.current_version() if version is None else version
-        files = self._manifest(v)["files"]
-        if not files:
+        m = self._manifest(v)
+        if not m["files"]:
             return None
-        return spark.read.parquet(*[os.path.join(self.root, f) for f in files])
+        return self._reader(spark, m.get("schema")).parquet(
+            *[os.path.join(self.root, f) for f in m["files"]]
+        )
 
     def pruned_paths(self, column: str, values: list) -> list[str]:
         """Directory list for a partition-pruned read of a table whose
@@ -199,10 +240,13 @@ class SnapshotTable:
                     "full read"
                 )
         old_files = set(self._manifest(version)["files"]) if version else set()
-        new_files = [f for f in self._manifest(cur)["files"] if f not in old_files]
+        m = self._manifest(cur)
+        new_files = [f for f in m["files"] if f not in old_files]
         if not new_files:
             return None
-        return spark.read.parquet(*[os.path.join(self.root, f) for f in new_files])
+        return self._reader(spark, m.get("schema")).parquet(
+            *[os.path.join(self.root, f) for f in new_files]
+        )
 
     def read_or_empty(self, spark: SparkSession, schema: StructType, version: int | None = None) -> DataFrame:
         df = self.read(spark, version)
@@ -227,9 +271,9 @@ class SnapshotTable:
         recovery to drop a partially-committed wave. History is
         preserved: the abandoned snapshot stays readable via time
         travel; only LATEST moves."""
-        files = self._manifest(version)["files"]
+        restored = self._manifest(version)
         m = {"rollback_to": version, **(metrics or {})}
-        return self._commit(list(files), "rollback", m, {})
+        return self._commit(list(restored["files"]), "rollback", m, {}, restored.get("schema"))
 
     def latest_manifest(self) -> dict:
         return self._manifest(self.current_version())
