@@ -2320,7 +2320,7 @@ def q_image_hamming_index_pairs(spark, sf):
     cached = _HAMMING_INDEX_CACHE.get(sf)
     if cached is None:
         idx = IncrementalHammingIndex(
-            spark, tempfile.mkdtemp(prefix="hidx_"), max_hamming=10, n_buckets=16
+            spark, tempfile.mkdtemp(prefix="hidx_"), max_hamming=10
         )
         pay = payload_df(spark, 600).select("image_id", "phash")
         # engineered near-dups: every 3rd image also arrives as a twin

@@ -118,12 +118,15 @@ class CrawlFrontier:
     def _recover(self) -> None:
         """Roll back log/payload snapshots from a wave whose commit
         token never reached the seen table (crash between steps 1–2 and
-        3 of the wave protocol). O(1): reads manifests, rewrites none
-        of the data."""
-        seen_tokens = {
-            (m.get("metrics") or {}).get("commit_token")
-            for m in self.seen.history()
-        }
+        3 of the wave protocol), and number the next wave after the last
+        one seen committed. O(1) in the data: reads manifests, rewrites
+        none of the data."""
+        seen_metrics = [m.get("metrics") or {} for m in self.seen.history()]
+        seen_tokens = {m.get("commit_token") for m in seen_metrics}
+        # the last wave seen committed: history() follows parent links
+        # back through compactions and invalidations, so rewriting seen
+        # does not lose it
+        self.last_wave = max((m.get("wave", 0) for m in seen_metrics), default=0)
         for tbl in (self.log, self.payload):
             last = tbl.latest_manifest()
             tok = (last.get("metrics") or {}).get("commit_token")
@@ -337,7 +340,7 @@ class CrawlFrontier:
             .agg(F.count("*").alias("n"))
             .collect()
         }
-        start = (len(self.metrics) + 1) % n_buckets  # rotate per wave
+        start = (self.last_wave + 1) % n_buckets  # rotate per wave
         chosen, cum = [], 0
         for i in range(n_buckets):
             b = (start + i) % n_buckets
@@ -506,7 +509,8 @@ class CrawlFrontier:
             self._clear_pending(ctx["deferred"])
             ctx["work"].unpersist()
             return None
-        m = self._commit_phase(len(self.metrics) + 1, ctx)
+        self.last_wave += 1
+        m = self._commit_phase(self.last_wave, ctx)
         ctx["results"].unpersist()
         ctx["work"].unpersist()
         return m
@@ -591,9 +595,8 @@ class CrawlFrontier:
                     ctx["work"].unpersist()
                     commit_fut, prev_ctx = None, None
                     break
-                # safe to read len(metrics): the barrier above guarantees
-                # the previous _commit_phase (which appends) has finished
-                wave_no = len(self.metrics) + 1
+                self.last_wave += 1
+                wave_no = self.last_wave
                 # chain in-memory: fetched rows are already excluded
                 # from next_pending by the state split. localCheckpoint
                 # truncates the logical plan at the wave boundary —

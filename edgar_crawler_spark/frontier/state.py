@@ -13,14 +13,23 @@ needs, with the same guarantees:
   the full file list, parent pointer, per-commit metrics and lineage;
   resuming = reading LATEST (kill-and-resume safe).
 * time travel      — ``read(version=k)`` reads any retained snapshot.
-* schema on read   — each manifest records the schema its files share
-  (the written ``df.schema`` as parquet reads it back, all fields
-  nullable; an append keeps it only if it equals the parent's,
-  otherwise records none; a rollback restores it). ``read`` and
-  ``read_since`` hand a recorded schema to the parquet reader, so a
-  read starts no schema-inference job; with none recorded (mixed-schema
-  append chains, manifests written before the schema was recorded) the
-  reader infers it as before.
+* schema on read   — each manifest records the schema of the columns
+  its files hold (the written ``df.schema`` minus any ``partition_by``
+  columns, as parquet reads it back: all fields nullable; an append
+  keeps it only if it equals the parent's, otherwise records none; a
+  rollback restores it) and the ``partition_by`` columns of its files.
+  ``read``, ``read_since`` and ``read_pruned`` hand a recorded schema to
+  the parquet reader, so a read starts no schema-inference job; with
+  none recorded (mixed-schema append chains, manifests written before
+  ``partition_by`` was recorded) the reader infers it.
+* one full read    — ``read`` lists every committed data dir
+  recursively, so it returns every row of a flat table and of a
+  hive-partitioned one alike (each ``append(partition_by=...)`` commit
+  is its own hive root, which Spark's partition discovery rejects);
+  partition columns are not returned, since the tables that use them
+  derive them from the data columns. Every commit of a table shares one
+  ``partition_by``; a partitioned table is compacted by its owning
+  index, whose ``compact()`` keeps the layout.
 
 On a real cluster, swap this class for ``spark.table("catalog.db.t")``
 with Iceberg's own commit protocol; every call site uses only
@@ -78,7 +87,13 @@ class SnapshotTable:
             return json.load(f)
 
     def _commit(
-        self, files: list[str], mode: str, metrics: dict, lineage: dict, schema: str | None
+        self,
+        files: list[str],
+        mode: str,
+        metrics: dict,
+        lineage: dict,
+        schema: str | None,
+        partition_by: list[str],
     ) -> int:
         parent = self.current_version()
         prev = []
@@ -96,6 +111,7 @@ class SnapshotTable:
             "metrics": metrics,
             "lineage": lineage,
             "schema": schema,
+            "partition_by": partition_by,
             "ts": time.time(),
         }
         mpath = os.path.join(self._snap_dir, f"v{version:06d}.json")
@@ -134,32 +150,44 @@ class SnapshotTable:
         return self._write(df, "overwrite", metrics, lineage, partition_by)
 
     def _write(self, df: DataFrame, mode: str, metrics, lineage, partition_by=None) -> int:
+        parts = list(partition_by or [])
+        if mode == "append":
+            pm = self.latest_manifest()
+            if pm["files"] and pm.get("partition_by", parts) != parts:
+                raise ValueError(
+                    f"append with partition_by={parts} onto {self.root}, whose "
+                    f"files are partitioned by {pm['partition_by']}"
+                )
         rel = os.path.join("data", uuid.uuid4().hex)
         path = os.path.join(self.root, rel)
         writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
+        if parts:
+            writer = writer.partitionBy(*parts)
         writer.parquet(path)
-        m = dict(metrics or {})
-        return self._commit([rel], mode, m, lineage or {}, _as_read(df.schema).json())
+        held = StructType([f for f in _as_read(df.schema).fields if f.name not in parts])
+        return self._commit([rel], mode, dict(metrics or {}), lineage or {}, held.json(), parts)
 
     @staticmethod
-    def _reader(spark: SparkSession, schema: str | None):
-        """A parquet reader that takes a recorded schema instead of
-        inferring one (inference is a Spark job per read)."""
+    def _reader(spark: SparkSession, manifest: dict):
+        """A recursive parquet reader over a manifest's data dirs that
+        takes the recorded schema instead of inferring one (inference is
+        a Spark job per read). A manifest without ``partition_by`` may
+        record partition columns its files do not hold, so it infers."""
+        reader = spark.read.option("recursiveFileLookup", "true")
+        schema = manifest.get("schema") if "partition_by" in manifest else None
         if schema is None:
-            return spark.read
-        return spark.read.schema(StructType.fromJson(json.loads(schema)))
+            return reader
+        return reader.schema(StructType.fromJson(json.loads(schema)))
 
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame | None:
-        """None when the table has no committed snapshot yet."""
+        """Every row of snapshot ``version`` (default: the latest), data
+        columns only; None when the table has no committed snapshot
+        yet."""
         v = self.current_version() if version is None else version
         m = self._manifest(v)
         if not m["files"]:
             return None
-        return self._reader(spark, m.get("schema")).parquet(
-            *[os.path.join(self.root, f) for f in m["files"]]
-        )
+        return self._reader(spark, m).parquet(*[os.path.join(self.root, f) for f in m["files"]])
 
     def pruned_paths(self, column: str, values: list) -> list[str]:
         """Directory list for a partition-pruned read of a table whose
@@ -178,7 +206,7 @@ class SnapshotTable:
                     # lose — skip the dir
                     continue
                 # a data dir with ROWS but no hive subdirs for this
-                # column (e.g. a flat compact() of a partitioned table)
+                # column (e.g. a flat overwrite of a partitioned table)
                 # would make pruning silently drop them — fail loud;
                 # layout-preserving compaction is the supported path
                 raise ValueError(
@@ -203,22 +231,7 @@ class SnapshotTable:
         dirs = self.pruned_paths(column, values)
         if not dirs:
             return None
-        return spark.read.parquet(*dirs)
-
-    def read_flat(self, spark: SparkSession, version: int | None = None) -> DataFrame | None:
-        """Full read of a hive-partitioned table (``append(partition_by=
-        ...)``) WITHOUT restoring the partition columns: recursive file
-        listing sidesteps Spark's multi-root partition-discovery
-        conflict (each commit is its own hive root).  Use when the
-        partition column is a derivable function of the data columns."""
-        v = self.current_version() if version is None else version
-        files = self._manifest(v)["files"]
-        if not files:
-            return None
-        return (
-            spark.read.option("recursiveFileLookup", "true")
-            .parquet(*[os.path.join(self.root, f) for f in files])
-        )
+        return self._reader(spark, self.latest_manifest()).parquet(*dirs)
 
     def read_since(self, spark: SparkSession, version: int) -> DataFrame | None:
         """Incremental consumption: ONLY the rows committed after
@@ -244,9 +257,7 @@ class SnapshotTable:
         new_files = [f for f in m["files"] if f not in old_files]
         if not new_files:
             return None
-        return self._reader(spark, m.get("schema")).parquet(
-            *[os.path.join(self.root, f) for f in new_files]
-        )
+        return self._reader(spark, m).parquet(*[os.path.join(self.root, f) for f in new_files])
 
     def read_or_empty(self, spark: SparkSession, schema: StructType, version: int | None = None) -> DataFrame:
         df = self.read(spark, version)
@@ -257,7 +268,16 @@ class SnapshotTable:
         commit): at 10^10 scale a seen-table accumulating one appended
         dir per wave degrades scan planning — compaction folds N dirs
         into one without changing snapshot semantics (history keeps the
-        old manifests)."""
+        old manifests). A partitioned table raises instead: a flat
+        rewrite would hide its rows from partition-pruned reads."""
+        parts = self.latest_manifest().get("partition_by")
+        if parts:
+            raise ValueError(
+                f"{self.root} is partitioned by {parts}; compact it with its "
+                "owning index's compact() (IncrementalLSHIndex, "
+                "IncrementalHammingIndex or IncrementalIVFIndex), which keeps "
+                "the layout"
+            )
         df = self.read(spark)
         if df is None:
             return self.current_version()
@@ -273,7 +293,10 @@ class SnapshotTable:
         travel; only LATEST moves."""
         restored = self._manifest(version)
         m = {"rollback_to": version, **(metrics or {})}
-        return self._commit(list(restored["files"]), "rollback", m, {}, restored.get("schema"))
+        schema = restored.get("schema") if "partition_by" in restored else None
+        return self._commit(
+            list(restored["files"]), "rollback", m, {}, schema, restored.get("partition_by", [])
+        )
 
     def latest_manifest(self) -> dict:
         return self._manifest(self.current_version())

@@ -283,6 +283,23 @@ def band_rows_from_sigs(sigs: DataFrame, k: int = MINHASH_K, bands: int = LSH_BA
     )
 
 
+# hive buckets of the persisted near-dup indexes: every commit writes
+# its rows under ``kb=<0..INDEX_BUCKETS-1>`` and an ``add`` reads only
+# the buckets its batch touches
+INDEX_BUCKETS = 16
+
+
+def _in_index_layout(table) -> bool:
+    """True when ``table`` holds no rows or its latest commit is the
+    ``kb``-bucketed layout at :data:`INDEX_BUCKETS` (stamp and manifest
+    agree)."""
+    m = table.latest_manifest()
+    return not m["files"] or (
+        (m.get("metrics") or {}).get("n_buckets") == INDEX_BUCKETS
+        and m.get("partition_by") == ["kb"]
+    )
+
+
 class IncrementalLSHIndex:
     """Persisted banded-LSH bucket table: near-dup candidate pairs for
     a NEW batch of documents against everything already ingested,
@@ -304,22 +321,20 @@ class IncrementalLSHIndex:
     the batch operator exactly whenever no bucket ever exceeds the
     cap.
 
-    ``n_buckets`` (r03 VERDICT item 5) lays the band table out
-    hive-partitioned by ``kb = pmod(xxhash64(band, band_key),
-    n_buckets)``: ``add()`` then reads ONLY the partitions whose kb
-    values the batch touches (directory pruning — stat calls, no
-    scan), so per-batch corpus input is proportional to touched
+    The band table is hive-partitioned by ``kb = pmod(xxhash64(band,
+    band_key), INDEX_BUCKETS)``: ``add()`` reads ONLY the partitions
+    whose kb values the batch touches (directory pruning — stat calls,
+    no scan), so per-batch corpus input is proportional to touched
     partitions instead of the full 10^10-row index.  A small batch
     (the production daily-slice/lookup regime) touches few partitions;
     a bulk backfill touches all of them, which is proportional anyway.
-    The bucket count is stamped into every commit's metrics and
-    guarded on reopen (a mismatched reopen would silently prune the
-    wrong directories — same failure class as the bloom shard-count
-    drift guard).  0 = legacy unpartitioned layout.
+    The bucket count is stamped into every commit's metrics; reopening
+    a table in any other layout (an unpartitioned index, another bucket
+    count) rewrites it once through :meth:`compact`.
 
-    ``min_sim`` + ``n_buckets`` additionally maintains a TWIN copy of
-    the band rows under ``<path>/_bydoc``, hive-partitioned by
-    ``db = pmod(xxhash64(doc_id), n_buckets)``: the dispose leg needs
+    ``min_sim`` additionally maintains a TWIN copy of the band rows
+    under ``<path>/_bydoc``, hive-partitioned by ``db =
+    pmod(xxhash64(doc_id), INDEX_BUCKETS)``: the dispose leg needs
     every band row of the candidate-member docs (non-matching bands
     count against the agreeing-seed estimate), and those rows scatter
     across ALL kb partitions — a doc-hash layout puts each doc's rows
@@ -340,8 +355,9 @@ class IncrementalLSHIndex:
         bucket_cap: int = LSH_BUCKET_CAP,
         tokenizer=tokens,
         min_sim: float | None = None,
-        n_buckets: int = 0,
     ):
+        import os
+
         from edgar_crawler_spark.frontier.state import SnapshotTable
 
         self.spark = spark
@@ -349,74 +365,55 @@ class IncrementalLSHIndex:
         self.k, self.bands, self.bucket_cap = k, bands, bucket_cap
         self.tokenizer = tokenizer
         self.min_sim = min_sim
-        self.n_buckets = int(n_buckets)
         self.last_scan_dirs: list[str] | None = None  # pruning observability
         self.last_dispose_dirs: list[str] | None = None
-        if self.table.current_version():
-            stamped = int(self.table.latest_metrics().get("n_buckets", 0))
-            if stamped != self.n_buckets:
-                raise ValueError(
-                    f"LSH index at {path} was written with n_buckets={stamped} "
-                    f"but reopened with n_buckets={self.n_buckets} — a mismatched "
-                    "layout would prune the wrong partitions"
-                )
-        self.bydoc = None
-        if self.n_buckets and self.min_sim is not None:
-            import os
-
-            from edgar_crawler_spark.frontier.state import SnapshotTable
-
-            self.bydoc = SnapshotTable(os.path.join(path, "_bydoc"))
+        self.bydoc = (
+            SnapshotTable(os.path.join(path, "_bydoc")) if min_sim is not None else None
+        )
+        if not _in_index_layout(self.table):
+            self.compact()  # rewrites the twin too
+        elif self.bydoc is not None:
             main_v = self.table.current_version()
             mirrored = int(self.bydoc.latest_metrics().get("main_version", -1))
             if main_v and mirrored != main_v:
                 # twin behind (crash between the two appends, or min_sim
                 # newly enabled on an existing table): rebuild it from
                 # the main table — a one-time full scan, then in sync
-                full = self.table.read_flat(self.spark)
-                self.bydoc.overwrite(
-                    full.withColumn("db", self._db_col()).repartition(
-                        self.n_buckets, "db"
-                    ),
-                    metrics={"main_version": main_v, "n_buckets": self.n_buckets},
-                    partition_by=["db"],
-                )
+                self._write_twin("overwrite", self.table.read(self.spark), main_v)
 
     def _kb_col(self):
-        return F.pmod(F.xxhash64("band", "band_key"), F.lit(self.n_buckets)).cast("int")
+        return F.pmod(F.xxhash64("band", "band_key"), F.lit(INDEX_BUCKETS)).cast("int")
 
     def _db_col(self):
-        return F.pmod(F.xxhash64("doc_id"), F.lit(self.n_buckets)).cast("int")
+        return F.pmod(F.xxhash64("doc_id"), F.lit(INDEX_BUCKETS)).cast("int")
+
+    def _write_twin(self, mode: str, rows: DataFrame, main_v: int) -> None:
+        """Commit ``rows`` to the doc-hash twin, stamped with the main
+        version they mirror."""
+        getattr(self.bydoc, mode)(
+            rows.withColumn("db", self._db_col()).repartition(INDEX_BUCKETS, "db"),
+            metrics={"main_version": main_v, "n_buckets": INDEX_BUCKETS},
+            partition_by=["db"],
+        )
 
     def compact(self) -> int:
         """Fold the accumulated per-batch commits into one data dir —
         same scan-planning hygiene as SnapshotTable.compact, but
-        PRESERVING the hive layout when ``n_buckets`` is set (a flat
-        rewrite would silently hide every row from the pruned reads;
-        ``pruned_paths`` fails loudly on such a mix).  ``kb`` is a pure
-        function of (band, band_key), so it is recomputed rather than
-        stored."""
-        if not self.n_buckets:
-            return self.table.compact(self.spark)
-        df = self.table.read_flat(self.spark)
+        PRESERVING the hive layout (a flat rewrite would silently hide
+        every row from the pruned reads; ``pruned_paths`` fails loudly
+        on such a mix).  ``kb`` is a pure function of (band, band_key),
+        so it is recomputed rather than stored; the same rewrite moves a
+        table in another layout to this one."""
+        df = self.table.read(self.spark)
         if df is None:
             return self.table.current_version()
-        rows = df.withColumn("kb", self._kb_col()).repartition(self.n_buckets, "kb")
         v = self.table.overwrite(
-            rows,
-            metrics={"compaction": True, "n_buckets": self.n_buckets},
+            df.withColumn("kb", self._kb_col()).repartition(INDEX_BUCKETS, "kb"),
+            metrics={"compaction": True, "n_buckets": INDEX_BUCKETS},
             partition_by=["kb"],
         )
         if self.bydoc is not None:
-            self.bydoc.overwrite(
-                df.withColumn("db", self._db_col()).repartition(self.n_buckets, "db"),
-                metrics={
-                    "compaction": True,
-                    "main_version": v,
-                    "n_buckets": self.n_buckets,
-                },
-                partition_by=["db"],
-            )
+            self._write_twin("overwrite", df, v)
         return v
 
     def add(self, docs: DataFrame) -> DataFrame:
@@ -425,19 +422,16 @@ class IncrementalLSHIndex:
         The returned frame is materialized (the state append must not
         recompute through it)."""
         new_rows = band_rows(docs, self.k, self.bands, tokenizer=self.tokenizer).persist()
-        if self.n_buckets:
-            # partition-pruned corpus read: the batch's touched kb values
-            # (≤ n_buckets ints — bounded driver collect), then only those
-            # hive subdirs are planned. The kb column is a pure function
-            # of (band, band_key), so the pruned read loses nothing the
-            # candidate join needs.
-            touched = [
-                r.kb for r in new_rows.select(self._kb_col().alias("kb")).distinct().collect()
-            ]
-            self.last_scan_dirs = self.table.pruned_paths("kb", touched)
-            old = self.table.read_pruned(self.spark, "kb", touched)
-        else:
-            old = self.table.read(self.spark)
+        # partition-pruned corpus read: the batch's touched kb values
+        # (≤ INDEX_BUCKETS ints — bounded driver collect), then only those
+        # hive subdirs are planned. The kb column is a pure function
+        # of (band, band_key), so the pruned read loses nothing the
+        # candidate join needs.
+        touched = [
+            r.kb for r in new_rows.select(self._kb_col().alias("kb")).distinct().collect()
+        ]
+        self.last_scan_dirs = self.table.pruned_paths("kb", touched)
+        old = self.table.read_pruned(self.spark, "kb", touched)
         # only buckets TOUCHED by the batch can produce pairs, so the
         # corpus is pre-filtered to the batch's bucket keys BEFORE any
         # aggregate or join — per-batch shuffle is proportional to rows
@@ -487,38 +481,29 @@ class IncrementalLSHIndex:
         if self.min_sim is not None:
             # dispose step: the persisted band keys ARE the signatures
             # (rows_per_band minhashes each), so the agreeing-seed
-            # Jaccard estimate reconstructs from the index itself. Only
-            # the candidate docs' band rows are pulled (semi-join by
-            # doc id), so the corpus is scanned, never shuffled.
-            # the agreeing-seed estimate needs member docs' band rows
-            # across ALL bands (non-matching bands count against the
-            # estimate). Under the kb layout a doc's rows scatter over
-            # every partition, so the doc-hash TWIN serves this leg:
-            # materialize the candidates once (they feed both the db
-            # collect and the verify join), prune the twin to the
-            # members' db partitions, and only those dirs are planned.
-            if self.bydoc is not None and self.table.current_version():
+            # Jaccard estimate reconstructs from the index itself. It
+            # needs member docs' band rows across ALL bands (non-matching
+            # bands count against the estimate), and under the kb layout
+            # a doc's rows scatter over every partition, so the doc-hash
+            # TWIN serves this leg: materialize the candidates once (they
+            # feed both the db collect and the verify join), prune the
+            # twin to the members' db partitions, and only those dirs
+            # are planned. Without corpus rows in the touched buckets
+            # every member is a batch doc, and the batch holds its rows.
+            if old is not None:
                 pairs = pairs.localCheckpoint()
             members = (
                 pairs.select(F.col("doc_a").alias("doc_id"))
                 .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
                 .dropDuplicates()
             )
-            if self.bydoc is not None and self.table.current_version():
+            full_old = None
+            if old is not None:
                 member_db = [
-                    r.db
-                    for r in members.select(self._db_col().alias("db"))
-                    .distinct()
-                    .collect()
+                    r.db for r in members.select(self._db_col().alias("db")).distinct().collect()
                 ]
                 self.last_dispose_dirs = self.bydoc.pruned_paths("db", member_db)
                 full_old = self.bydoc.read_pruned(self.spark, "db", member_db)
-            else:
-                # unpartitioned layout: the dispose leg reads the full
-                # table — scan-only, semi-joined by the member list
-                full_old = (
-                    self.table.read_flat(self.spark) if self.n_buckets else old
-                ) if old is not None else None
             all_bands = new_rows if full_old is None else new_rows.unionByName(
                 full_old.dropDuplicates(["doc_id", "band", "band_key"]).join(
                     new_rows.select("doc_id").dropDuplicates(), "doc_id", "left_anti"
@@ -558,28 +543,18 @@ class IncrementalLSHIndex:
             # skips empty commits, but pointless manifest churn)
             new_rows.unpersist()
             return pairs
-        metrics = {"docs": n_docs, "n_buckets": self.n_buckets}
-        if self.n_buckets:
-            # one file per touched bucket per commit: repartition on kb
-            # before the hive-partitioned write (partitionBy alone would
-            # emit shuffle_partitions × buckets small files)
-            write_rows = new_rows.withColumn("kb", self._kb_col()).repartition(
-                self.n_buckets, "kb"
-            )
-            v = self.table.append(write_rows, metrics=metrics, partition_by=["kb"])
-            if self.bydoc is not None:
-                # twin append stamped with the main version it mirrors;
-                # a crash between these two commits leaves the stamp
-                # behind and the next open rebuilds the twin (__init__)
-                self.bydoc.append(
-                    new_rows.withColumn("db", self._db_col()).repartition(
-                        self.n_buckets, "db"
-                    ),
-                    metrics={"main_version": v, "n_buckets": self.n_buckets},
-                    partition_by=["db"],
-                )
-        else:
-            self.table.append(new_rows, metrics=metrics)
+        # one file per touched bucket per commit: repartition on kb
+        # before the hive-partitioned write (partitionBy alone would
+        # emit shuffle_partitions × buckets small files)
+        v = self.table.append(
+            new_rows.withColumn("kb", self._kb_col()).repartition(INDEX_BUCKETS, "kb"),
+            metrics={"docs": n_docs, "n_buckets": INDEX_BUCKETS},
+            partition_by=["kb"],
+        )
+        if self.bydoc is not None:
+            # a crash between these two commits leaves the twin's stamp
+            # behind and the next open rebuilds the twin (__init__)
+            self._write_twin("append", new_rows, v)
         new_rows.unpersist()
         return pairs
 
@@ -784,13 +759,14 @@ class IncrementalHammingIndex:
     State is (doc_id, sketch, band, byteval) rows — bands+1 banding
     per the pigeonhole guarantee of :func:`hamming_near_dup_pairs` —
     appended with the same crash-safe manifest commits as the frontier
-    tables.  ``n_buckets`` lays the table out hive-partitioned by
-    ``kb = pmod(xxhash64(band, byteval), n_buckets)``: ``add()`` plans
-    only the partitions the batch touches (directory pruning, stat
-    calls not scans).  (bits, bands, n_buckets) are stamped into every
-    commit and guarded on reopen — a mismatched banding would compute
-    different bytevals and silently miss pairs.  ``bucket_cap`` is the
-    degenerate-bucket guard (every near-black thumbnail shares
+    tables, hive-partitioned by ``kb = pmod(xxhash64(band, byteval),
+    INDEX_BUCKETS)``: ``add()`` plans only the partitions the batch
+    touches (directory pruning, stat calls not scans).  (bits, bands)
+    and the bucket count are stamped into every commit.  A reopen with
+    another (bits, bands) raises — a mismatched banding would compute
+    different bytevals and silently miss pairs; a table in another
+    layout is rewritten once through :meth:`compact`.  ``bucket_cap``
+    is the degenerate-bucket guard (every near-black thumbnail shares
     byteval 0): an over-cap bucket stops emitting, monotonically, same
     contract as the LSH index.  Replayed batches (crash between the
     caller's commit and ours) re-append byte-identical rows; the
@@ -805,7 +781,6 @@ class IncrementalHammingIndex:
         max_hamming: int = 6,
         bands: int | None = None,
         bucket_cap: int = LSH_BUCKET_CAP,
-        n_buckets: int = 0,
     ):
         from edgar_crawler_spark.frontier.state import SnapshotTable
 
@@ -817,21 +792,25 @@ class IncrementalHammingIndex:
         if self.bands <= max_hamming:
             raise ValueError("pigeonhole recall needs bands > max_hamming")
         self.bucket_cap = bucket_cap
-        self.n_buckets = int(n_buckets)
         self.last_scan_dirs: list[str] | None = None
         if self.table.current_version():
             m = self.table.latest_metrics()
-            stamped = (int(m.get("bits", 0)), int(m.get("bands", 0)), int(m.get("n_buckets", 0)))
-            mine = (self.bits, self.bands, self.n_buckets)
+            stamped = (int(m.get("bits", 0)), int(m.get("bands", 0)))
+            mine = (self.bits, self.bands)
             if stamped != mine:
                 raise ValueError(
-                    f"Hamming index at {path} was written with (bits, bands, "
-                    f"n_buckets)={stamped} but reopened with {mine} — a "
-                    "mismatched banding/layout would silently miss pairs"
+                    f"Hamming index at {path} was written with (bits, bands)="
+                    f"{stamped} but reopened with {mine} — a mismatched "
+                    "banding would silently miss pairs"
                 )
+        if not _in_index_layout(self.table):
+            self.compact()
 
     def _kb_col(self):
-        return F.pmod(F.xxhash64("band", "byteval"), F.lit(self.n_buckets)).cast("int")
+        return F.pmod(F.xxhash64("band", "byteval"), F.lit(INDEX_BUCKETS)).cast("int")
+
+    def _stamp(self) -> dict:
+        return {"bits": self.bits, "bands": self.bands, "n_buckets": INDEX_BUCKETS}
 
     def _band_rows(self, df: DataFrame, id_col: str, hash_col: str) -> DataFrame:
         bounds = simhash_band_bounds(self.bits, self.bands)
@@ -844,22 +823,14 @@ class IncrementalHammingIndex:
 
     def compact(self) -> int:
         """Fold per-batch commits into one data dir, preserving the
-        hive layout when ``n_buckets`` is set (same hygiene as
-        IncrementalLSHIndex.compact; ``kb`` is recomputed, not stored)."""
-        if not self.n_buckets:
-            return self.table.compact(self.spark)
-        df = self.table.read_flat(self.spark)
+        hive layout (same hygiene as IncrementalLSHIndex.compact; ``kb``
+        is recomputed, not stored)."""
+        df = self.table.read(self.spark)
         if df is None:
             return self.table.current_version()
-        rows = df.withColumn("kb", self._kb_col()).repartition(self.n_buckets, "kb")
         return self.table.overwrite(
-            rows,
-            metrics={
-                "compaction": True,
-                "bits": self.bits,
-                "bands": self.bands,
-                "n_buckets": self.n_buckets,
-            },
+            df.withColumn("kb", self._kb_col()).repartition(INDEX_BUCKETS, "kb"),
+            metrics={"compaction": True, **self._stamp()},
             partition_by=["kb"],
         )
 
@@ -874,15 +845,11 @@ class IncrementalHammingIndex:
         prefix = id_col.split("_")[0] if id_col.endswith("_id") else id_col
         out_a, out_b = f"{prefix}_a", f"{prefix}_b"
         new_rows = self._band_rows(df, id_col, hash_col).persist()
-        if self.n_buckets:
-            touched = [
-                r.kb
-                for r in new_rows.select(self._kb_col().alias("kb")).distinct().collect()
-            ]
-            self.last_scan_dirs = self.table.pruned_paths("kb", touched)
-            old = self.table.read_pruned(self.spark, "kb", touched)
-        else:
-            old = self.table.read(self.spark)
+        touched = [
+            r.kb for r in new_rows.select(self._kb_col().alias("kb")).distinct().collect()
+        ]
+        self.last_scan_dirs = self.table.pruned_paths("kb", touched)
+        old = self.table.read_pruned(self.spark, "kb", touched)
         new_buckets = new_rows.select("band", "byteval").dropDuplicates()
         if old is None:
             relevant = new_rows
@@ -918,19 +885,11 @@ class IncrementalHammingIndex:
         if n_docs == 0:
             new_rows.unpersist()
             return pairs
-        metrics = {
-            "docs": n_docs,
-            "bits": self.bits,
-            "bands": self.bands,
-            "n_buckets": self.n_buckets,
-        }
-        if self.n_buckets:
-            write_rows = new_rows.withColumn("kb", self._kb_col()).repartition(
-                self.n_buckets, "kb"
-            )
-            self.table.append(write_rows, metrics=metrics, partition_by=["kb"])
-        else:
-            self.table.append(new_rows, metrics=metrics)
+        self.table.append(
+            new_rows.withColumn("kb", self._kb_col()).repartition(INDEX_BUCKETS, "kb"),
+            metrics={"docs": n_docs, **self._stamp()},
+            partition_by=["kb"],
+        )
         new_rows.unpersist()
         return pairs
 

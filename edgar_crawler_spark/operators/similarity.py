@@ -863,7 +863,7 @@ class IncrementalIVFIndex:
         """Fold per-batch commits into one data dir, preserving the
         hive layout (``kb`` recomputed from the stored ``cell``
         column); also dedups crash-replayed rows while rewriting."""
-        df = self.vectors.read_flat(self.spark)
+        df = self.vectors.read(self.spark)
         if df is None:
             return self.vectors.current_version()
         rows = (

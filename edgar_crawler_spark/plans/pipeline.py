@@ -95,7 +95,6 @@ def caption_near_dups_from_frontier(
     index_path: str | None = None,
     max_hamming: int = 6,
     min_sim: float | None = 0.8,
-    lsh_buckets: int = 0,
 ) -> DataFrame | None:
     """Post-crawl near-dup detection over THIS workdir's payload table,
     incremental across runs — the image+caption corpus twin of the
@@ -125,15 +124,8 @@ def caption_near_dups_from_frontier(
     # Jaccard estimate before they become near_dup_pairs rows —
     # downstream consumers (--drop-near-dups) treat pairs as true
     # duplicate edges, so raw banding false-positives must not land
-    # lsh_buckets > 0 lays the caption index out hive-partitioned so the
-    # per-pass corpus read prunes to touched buckets (the 10^10-doc
-    # shape); 0 keeps the legacy flat layout — the stamped-bucket-count
-    # guard makes the two layouts mutually exclusive per index path
     idx = IncrementalLSHIndex(
-        spark,
-        index_path or os.path.join(workdir, "caption_lsh"),
-        min_sim=min_sim,
-        n_buckets=lsh_buckets,
+        spark, index_path or os.path.join(workdir, "caption_lsh"), min_sim=min_sim
     )
     seen_tbl = SnapshotTable(os.path.join(workdir, "caption_lsh_seen"))
     pairs_tbl = SnapshotTable(os.path.join(workdir, "near_dup_pairs"))

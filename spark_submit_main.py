@@ -112,19 +112,6 @@ def main() -> None:
         "banded candidates instead",
     )
     ap.add_argument(
-        "--lsh-buckets",
-        type=int,
-        default=0,
-        help="hive-partition the caption LSH index into this many hash "
-        "buckets of (band, band_key) so the candidate-generation leg "
-        "reads only touched partitions (use on large corpora; must stay "
-        "constant for the life of the index; 0 = flat legacy layout). "
-        "With a dispose threshold set (the default min-sim) a doc-hash "
-        "twin of the band rows is kept under <index>/_bydoc so the "
-        "verification leg is partition-pruned too (storage 2x the band "
-        "rows -- still k integers per doc)",
-    )
-    ap.add_argument(
         "--compact-lsh-index",
         type=int,
         default=0,
@@ -425,7 +412,6 @@ def main() -> None:
             spark,
             args.workdir,
             min_sim=None if ms is not None and ms < 0 else ms,
-            lsh_buckets=args.lsh_buckets,
         )
         report["near_dup_pairs"] = 0 if pairs is None else pairs.count()
         if runlog:
@@ -439,7 +425,6 @@ def main() -> None:
                 spark,
                 _os.path.join(args.workdir, "caption_lsh"),
                 min_sim=None if ms is not None and ms < 0 else ms,
-                n_buckets=args.lsh_buckets,
             )
             n_dirs = len(idx.table.latest_manifest()["files"])
             if n_dirs >= args.compact_lsh_index:

@@ -111,8 +111,8 @@ def test_crash_between_pairs_and_seen_commits(spark, tmp_path, monkeypatch):
 
     real_append = SnapshotTable.append
 
-    def crashing_append(self, df, metrics=None, lineage=None):
-        v = real_append(self, df, metrics, lineage)
+    def crashing_append(self, df, metrics=None, lineage=None, partition_by=None):
+        v = real_append(self, df, metrics, lineage, partition_by)
         if self.root.endswith("near_dup_pairs"):
             raise RuntimeError("crash after pairs commit")
         return v
@@ -160,8 +160,8 @@ def test_crash_between_index_and_pairs_commits(spark, tmp_path, monkeypatch):
 
     real_append = SnapshotTable.append
 
-    def crashing_append(self, df, metrics=None, lineage=None):
-        v = real_append(self, df, metrics, lineage)
+    def crashing_append(self, df, metrics=None, lineage=None, partition_by=None):
+        v = real_append(self, df, metrics, lineage, partition_by)
         if self.root.endswith("caption_lsh"):
             raise RuntimeError("crash after index commit")
         return v
@@ -278,36 +278,3 @@ def test_null_captions_do_not_disable_phash_leg(spark, tmp_path):
     rows = out.collect()
     assert rows and all(r.via == "phash" for r in rows)
     assert len(rows) == 4 * (5 * 4 // 2)  # 4 clusters of 5 copies
-
-
-def test_lsh_buckets_knob_matches_flat_layout(spark, tmp_path):
-    """--lsh-buckets lays the caption index out partition-pruned; the
-    pass must emit exactly the pairs the flat layout emits, across an
-    incremental second run."""
-
-    def _dup_fetcher(url: str, attempt: int):
-        import re
-
-        from edgar_crawler_spark.fixtures.payload import make_payload_row
-
-        i = int(re.search(r"-(\d{6})-index\.html$", url).group(1))
-        r = make_payload_row(i % 5)
-        return 200, r["bytes"], r["caption"]
-
-    def run_variant(sub, lsh_buckets):
-        wd = str(tmp_path / sub)
-        fr = CrawlFrontier(spark, wd, fetcher=_dup_fetcher)
-        fr.submit(seed_index_df(spark, 10, n_hosts=2, hot_host=False))
-        fr.run()
-        p1 = caption_near_dups_from_frontier(spark, wd, lsh_buckets=lsh_buckets)
-        got = {tuple(r) for r in p1.collect()}
-        # incremental second slice
-        fr.submit(seed_index_df(spark, 14, n_hosts=2, hot_host=False))
-        fr.run()
-        p2 = caption_near_dups_from_frontier(spark, wd, lsh_buckets=lsh_buckets)
-        return got, {tuple(r) for r in p2.collect()}
-
-    flat1, flat2 = run_variant("flat", 0)
-    part1, part2 = run_variant("part", 16)
-    assert part1 == flat1 and len(flat1) > 0
-    assert part2 == flat2 and len(flat2) > 0

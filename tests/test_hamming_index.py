@@ -37,12 +37,9 @@ def _pairset(df):
     return {(r.image_a, r.image_b, r.hamming) for r in df.collect()}
 
 
-@pytest.mark.parametrize("n_buckets", [0, 16])
-def test_incremental_equals_batch(spark, tmp_path, n_buckets):
+def test_incremental_equals_batch(spark, tmp_path):
     rows = _corpus()
-    idx = IncrementalHammingIndex(
-        spark, str(tmp_path / "hi"), max_hamming=6, n_buckets=n_buckets
-    )
+    idx = IncrementalHammingIndex(spark, str(tmp_path / "hi"), max_hamming=6)
     got = set()
     k = len(rows) // 3
     for batch in (rows[:k], rows[k : 2 * k], rows[2 * k :]):
@@ -57,15 +54,13 @@ def test_incremental_equals_batch(spark, tmp_path, n_buckets):
 def test_reopen_guard_and_continue(spark, tmp_path):
     path = str(tmp_path / "hi")
     rows = _corpus(30)
-    idx = IncrementalHammingIndex(spark, path, n_buckets=8)
+    idx = IncrementalHammingIndex(spark, path)
     idx.add(_mk(spark, rows[:20]))
-    with pytest.raises(ValueError, match="n_buckets"):
-        IncrementalHammingIndex(spark, path, n_buckets=16)
     with pytest.raises(ValueError, match="bands"):
-        IncrementalHammingIndex(spark, path, max_hamming=3, n_buckets=8)
-    re = IncrementalHammingIndex(spark, path, n_buckets=8)
+        IncrementalHammingIndex(spark, path, max_hamming=3)
+    re = IncrementalHammingIndex(spark, path)
     got = _pairset(re.add(_mk(spark, rows[20:])))
-    fresh = IncrementalHammingIndex(spark, str(tmp_path / "hi2"), n_buckets=8)
+    fresh = IncrementalHammingIndex(spark, str(tmp_path / "hi2"))
     fresh.add(_mk(spark, rows[:20]))
     assert got == _pairset(fresh.add(_mk(spark, rows[20:])))
 
@@ -75,7 +70,7 @@ def test_pruned_scan_reads_fewer_dirs(spark, tmp_path):
     import os
 
     path = str(tmp_path / "hi")
-    idx = IncrementalHammingIndex(spark, path, n_buckets=32)
+    idx = IncrementalHammingIndex(spark, path)
     idx.add(_mk(spark, _corpus(300, seed=1)))
     probe = _mk(spark, [("probe0", 12345), ("probe1", -99887766)])
     idx.add(probe)
@@ -90,12 +85,12 @@ def test_replay_neutralized(spark, tmp_path):
     single-add state, observed through a third batch's output."""
     rows = _corpus(40, seed=2)
     b1, b2, b3 = rows[:15], rows[15:28], rows[28:]
-    once = IncrementalHammingIndex(spark, str(tmp_path / "a"), n_buckets=8)
+    once = IncrementalHammingIndex(spark, str(tmp_path / "a"))
     once.add(_mk(spark, b1))
     once.add(_mk(spark, b2))
     want = _pairset(once.add(_mk(spark, b3)))
 
-    replay = IncrementalHammingIndex(spark, str(tmp_path / "b"), n_buckets=8)
+    replay = IncrementalHammingIndex(spark, str(tmp_path / "b"))
     replay.add(_mk(spark, b1))
     second = _pairset(replay.add(_mk(spark, b2)))
     # crash replay of b2: stale rows drop in favor of the fresh copies,
@@ -116,7 +111,7 @@ def test_bucket_cap_suppresses_degenerate_bucket(spark, tmp_path):
 
 
 def test_empty_batch_commits_nothing(spark, tmp_path):
-    idx = IncrementalHammingIndex(spark, str(tmp_path / "hi"), n_buckets=8)
+    idx = IncrementalHammingIndex(spark, str(tmp_path / "hi"))
     idx.add(_mk(spark, _corpus(20, seed=3)))
     v = idx.table.current_version()
     out = idx.add(_mk(spark, []))
@@ -140,13 +135,13 @@ def test_compact_preserves_layout_and_results(spark, tmp_path):
 
     path = str(tmp_path / "hi")
     rows = _corpus(60, seed=4)
-    idx = IncrementalHammingIndex(spark, path, n_buckets=8)
+    idx = IncrementalHammingIndex(spark, path)
     idx.add(_mk(spark, rows[:30]))
     idx.add(_mk(spark, rows[30:50]))
     idx.compact()
     assert glob.glob(path + "/data/*/kb=*/*.parquet")  # hive layout kept
     got = _pairset(idx.add(_mk(spark, rows[50:])))
-    fresh = IncrementalHammingIndex(spark, str(tmp_path / "hi2"), n_buckets=8)
+    fresh = IncrementalHammingIndex(spark, str(tmp_path / "hi2"))
     fresh.add(_mk(spark, rows[:30]))
     fresh.add(_mk(spark, rows[30:50]))
     assert got == _pairset(fresh.add(_mk(spark, rows[50:])))

@@ -140,8 +140,8 @@ def test_incremental_verified_equals_batch(spark, tmp_path):
 
 
 def test_partitioned_layout_prunes_corpus_scan(spark, tmp_path):
-    """n_buckets lays the band table out hive-partitioned by
-    kb = pmod(xxhash64(band, band_key), n_buckets): a batch touching
+    """The band table is hive-partitioned by
+    kb = pmod(xxhash64(band, band_key), INDEX_BUCKETS): a batch touching
     few buckets must READ fewer partition dirs than the table holds
     (directory pruning), while 3-batch ≡ one-shot equivalence and
     cross-batch recall are unchanged."""
@@ -154,7 +154,7 @@ def test_partitioned_layout_prunes_corpus_scan(spark, tmp_path):
         for r in minhash_lsh_pairs(full, bucket_cap=10**6).collect()
     }
     path = str(tmp_path / "lshp")
-    idx = IncrementalLSHIndex(spark, path, bucket_cap=10**6, n_buckets=16)
+    idx = IncrementalLSHIndex(spark, path, bucket_cap=10**6)
     got = set()
     for lo, hi in [(0, 40), (40, 80), (80, 120)]:
         got |= {(r.doc_a, r.doc_b) for r in idx.add(_docs(spark, lo, hi)).collect()}
@@ -180,25 +180,28 @@ def test_partitioned_min_sim_matches_unpartitioned(spark, tmp_path):
     (partition-pruned to the candidate members' buckets)."""
     batches = [(0, 60), (60, 120)]
 
-    def run(path, n_buckets):
-        idx = IncrementalLSHIndex(
-            spark, path, bucket_cap=10**6, min_sim=0.5, n_buckets=n_buckets
-        )
-        out = set()
-        for lo, hi in batches:
-            out |= {
-                (r.doc_a, r.doc_b, r.est_jaccard)
-                for r in idx.add(_docs(spark, lo, hi)).collect()
-            }
-        return out
+    from edgar_crawler_spark.operators.dedup import minhash_verified_pairs
 
-    flat = run(str(tmp_path / "flat"), 0)
-    part = run(str(tmp_path / "part"), 16)
-    assert part == flat and len(flat) > 0
+    full = {
+        (r.doc_a, r.doc_b, r.est_jaccard)
+        for r in minhash_verified_pairs(
+            _docs(spark, 0, 120), bucket_cap=10**6, min_sim=0.5
+        ).collect()
+    }
+    idx = IncrementalLSHIndex(spark, str(tmp_path / "part"), bucket_cap=10**6, min_sim=0.5)
+    for lo, hi in batches:
+        got = {
+            (r.doc_a, r.doc_b, r.est_jaccard)
+            for r in idx.add(_docs(spark, lo, hi)).collect()
+        }
+        # each batch emits exactly the unpartitioned batch operator's
+        # pairs that touch it and no earlier batch's
+        want = {t for t in full if lo <= t[1] < hi}
+        assert got == want and got
 
 
 def test_dispose_twin_prunes_member_scan(spark, tmp_path):
-    """min_sim + n_buckets maintains the _bydoc twin: a small batch's
+    """min_sim maintains the _bydoc twin: a small batch's
     dispose leg must read only the member docs' db partitions, not the
     whole twin (directory pruning, observable via last_dispose_dirs)."""
     import glob
@@ -206,7 +209,7 @@ def test_dispose_twin_prunes_member_scan(spark, tmp_path):
 
     path = str(tmp_path / "lshd")
     idx = IncrementalLSHIndex(
-        spark, path, bucket_cap=10**6, min_sim=0.5, n_buckets=16
+        spark, path, bucket_cap=10**6, min_sim=0.5
     )
     for lo, hi in [(0, 60), (60, 120)]:
         idx.add(_docs(spark, lo, hi))
@@ -228,10 +231,10 @@ def test_dispose_twin_backfills_on_late_enable_and_crash(spark, tmp_path):
     """Enabling min_sim on a pre-twin table and reopening after a crash
     between the two appends must both rebuild the twin from the main
     table (stamp mismatch → overwrite) and then answer identically to
-    an always-enabled flat-layout index."""
+    an always-enabled index."""
     batches = [(0, 60), (60, 120)]
 
-    # reference: unpartitioned min_sim index over the same batches
+    # reference: a min_sim index over the same batches
     ref_idx = IncrementalLSHIndex(
         spark, str(tmp_path / "ref"), bucket_cap=10**6, min_sim=0.5
     )
@@ -244,12 +247,12 @@ def test_dispose_twin_backfills_on_late_enable_and_crash(spark, tmp_path):
 
     # late enable: first batch ingested WITHOUT min_sim (no twin) …
     path = str(tmp_path / "late")
-    IncrementalLSHIndex(spark, path, bucket_cap=10**6, n_buckets=16).add(
+    IncrementalLSHIndex(spark, path, bucket_cap=10**6).add(
         _docs(spark, 0, 60)
     )
     # … then reopened WITH min_sim: __init__ must backfill the twin
     idx = IncrementalLSHIndex(
-        spark, path, bucket_cap=10**6, min_sim=0.5, n_buckets=16
+        spark, path, bucket_cap=10**6, min_sim=0.5
     )
     assert int(idx.bydoc.latest_metrics()["main_version"]) == idx.table.current_version()
     got = {
@@ -265,7 +268,7 @@ def test_dispose_twin_backfills_on_late_enable_and_crash(spark, tmp_path):
     twin_v = idx.bydoc.current_version()
     idx.bydoc.rollback(twin_v - 1)
     idx2 = IncrementalLSHIndex(
-        spark, path, bucket_cap=10**6, min_sim=0.5, n_buckets=16
+        spark, path, bucket_cap=10**6, min_sim=0.5
     )
     assert int(idx2.bydoc.latest_metrics()["main_version"]) == idx2.table.current_version()
     dup = spark.createDataFrame(
@@ -282,7 +285,7 @@ def test_dispose_twin_survives_compaction(spark, tmp_path):
 
     path = str(tmp_path / "lshdc")
     idx = IncrementalLSHIndex(
-        spark, path, bucket_cap=10**6, min_sim=0.5, n_buckets=16
+        spark, path, bucket_cap=10**6, min_sim=0.5
     )
     for lo, hi in [(0, 40), (40, 80)]:
         idx.add(_docs(spark, lo, hi))
@@ -296,21 +299,92 @@ def test_dispose_twin_survives_compaction(spark, tmp_path):
     assert (0, 9000) in pairs
 
 
+def _legacy_index(spark, path, docs, n_buckets):
+    """An index table as releases with a settable bucket count wrote
+    it: band rows flat (``n_buckets=0``) or under ``kb`` at another
+    bucket count, stamped with that count, in manifests that do not
+    record ``partition_by``."""
+    import json
+    import os
+
+    from edgar_crawler_spark.frontier.state import SnapshotTable
+    from edgar_crawler_spark.operators.dedup import band_rows
+
+    table = SnapshotTable(path)
+    for lo, hi in docs:
+        rows = band_rows(_docs(spark, lo, hi))
+        parts = None
+        if n_buckets:
+            kb = F.pmod(F.xxhash64("band", "band_key"), F.lit(n_buckets)).cast("int")
+            rows, parts = rows.withColumn("kb", kb), ["kb"]
+        v = table.append(rows, metrics={"docs": hi - lo, "n_buckets": n_buckets}, partition_by=parts)
+        mpath = os.path.join(path, "_snapshots", f"v{v:06d}.json")
+        with open(mpath) as f:
+            manifest = json.load(f)
+        del manifest["partition_by"]
+        if n_buckets:  # the schema then named the partition column too
+            manifest["schema"] = rows.schema.json()
+        with open(mpath, "w") as f:
+            json.dump(manifest, f)
+    return table
+
+
 def test_partitioned_reopen_guard(spark, tmp_path):
-    """A bucket-count mismatch on reopen must fail loudly — silently
-    pruning the wrong directories would drop near-dup edges."""
-    import pytest
+    """A table written at another bucket count must never be pruned
+    with this layout's bucket ids (that would drop near-dup edges):
+    reopening rewrites it once into the current layout, and it answers
+    as an index built in that layout does."""
+    from edgar_crawler_spark.operators.dedup import INDEX_BUCKETS, band_rows
 
     path = str(tmp_path / "lshg")
-    IncrementalLSHIndex(spark, path, n_buckets=16).add(_docs(spark, 0, 10))
-    with pytest.raises(ValueError, match="n_buckets"):
-        IncrementalLSHIndex(spark, path, n_buckets=8)
-    # matching bucket count reopens fine and sees the corpus
-    idx = IncrementalLSHIndex(spark, path, n_buckets=16)
+    _legacy_index(spark, path, [(0, 10), (10, 20)], n_buckets=8)
+    idx = IncrementalLSHIndex(spark, path)
+    assert idx.table.latest_metrics()["n_buckets"] == INDEX_BUCKETS
+    live = idx.table.latest_manifest()["files"]
+    assert len(live) == 1
+    # every row sits under its bucket at the current count
+    kb = F.pmod(F.xxhash64("band", "band_key"), F.lit(INDEX_BUCKETS))
+    rewritten = spark.read.parquet(f"{path}/{live[0]}")
+    assert rewritten.filter(F.col("kb") != kb).count() == 0
+    assert idx.table.read(spark).count() == band_rows(_docs(spark, 0, 20)).count()
     dup = spark.createDataFrame(
         [(9000, _docs(spark, 0, 1).collect()[0].text)], ["doc_id", "text"]
     )
     assert (0, 9000) in {(r.doc_a, r.doc_b) for r in idx.add(dup).collect()}
+    # a reopen in the current layout rewrites nothing
+    v = idx.table.current_version()
+    IncrementalLSHIndex(spark, path)
+    assert idx.table.current_version() == v
+
+
+def test_flat_index_is_rewritten_on_reopen(spark, tmp_path):
+    """Migration: an unpartitioned index (the former default layout) is
+    rewritten to the hive layout on reopen, twin included, and emits
+    the same verified pairs as an index built in that layout."""
+    import glob
+
+    path = str(tmp_path / "flat")
+    _legacy_index(spark, path, [(0, 40), (40, 80)], n_buckets=0)
+    assert not glob.glob(path + "/data/*/kb=*")
+    idx = IncrementalLSHIndex(spark, path, bucket_cap=10**6, min_sim=0.5)
+    manifest = idx.table.latest_manifest()
+    assert manifest["partition_by"] == ["kb"] and len(manifest["files"]) == 1
+    assert glob.glob(f"{path}/{manifest['files'][0]}/kb=*/*.parquet")
+    assert int(idx.bydoc.latest_metrics()["main_version"]) == idx.table.current_version()
+    assert idx.table.read(spark).columns == ["doc_id", "band", "band_key"]
+
+    fresh = IncrementalLSHIndex(spark, str(tmp_path / "fresh"), bucket_cap=10**6, min_sim=0.5)
+    for lo, hi in [(0, 40), (40, 80)]:
+        fresh.add(_docs(spark, lo, hi))
+
+    def pairs(index):
+        return {
+            (r.doc_a, r.doc_b, r.est_jaccard)
+            for r in index.add(_docs(spark, 80, 120)).collect()
+        }
+
+    got = pairs(idx)
+    assert got == pairs(fresh) and got
 
 
 def test_partitioned_compaction_preserves_layout_and_results(spark, tmp_path):
@@ -323,7 +397,7 @@ def test_partitioned_compaction_preserves_layout_and_results(spark, tmp_path):
     import pytest
 
     path = str(tmp_path / "lshc")
-    idx = IncrementalLSHIndex(spark, path, bucket_cap=10**6, n_buckets=16)
+    idx = IncrementalLSHIndex(spark, path, bucket_cap=10**6)
     for lo, hi in [(0, 40), (40, 80), (80, 120)]:
         idx.add(_docs(spark, lo, hi))
     dirs_before = {os.path.dirname(f) for f in glob.glob(path + "/data/*/kb=*/*.parquet")}
@@ -347,7 +421,7 @@ def test_partitioned_compaction_preserves_layout_and_results(spark, tmp_path):
 
     # the loud-failure guard: a FLAT rewrite of a partitioned table
     # breaks pruned reads with an explicit error, never silence
-    flat = idx.table.read_flat(spark)
+    flat = idx.table.read(spark)
     idx.table.overwrite(flat, metrics={"n_buckets": 16})
     with pytest.raises(ValueError, match="no kb= partitions"):
         idx.add(dup)
@@ -359,7 +433,7 @@ def test_empty_batch_does_not_poison_partitioned_layout(spark, tmp_path):
     and pruned_paths skips genuinely empty data dirs (only a dir WITH
     rows and no hive subdirs is a layout violation)."""
     path = str(tmp_path / "lshe")
-    idx = IncrementalLSHIndex(spark, path, bucket_cap=10**6, n_buckets=16)
+    idx = IncrementalLSHIndex(spark, path, bucket_cap=10**6)
     empty = spark.createDataFrame([], "doc_id long, text string")
     assert idx.add(empty).count() == 0
     assert idx.table.current_version() == 0  # no manifest churn

@@ -1,6 +1,8 @@
 """Snapshot manifests record the schema their files share, so ``read``
 hands it to the parquet reader instead of starting a schema-inference
-job, and returns what inference would have returned."""
+job, and returns what inference over the same files would have
+returned; ``read`` lists files recursively, so it reads tables of
+hive-partitioned commits as well."""
 
 import json
 import os
@@ -20,7 +22,11 @@ def _shape(schema):
 def _inferred(spark, table, version=None):
     v = table.current_version() if version is None else version
     files = table.history()[v - 1]["files"]
-    return spark.read.parquet(*[os.path.join(table.root, f) for f in files]).schema
+    return (
+        spark.read.option("recursiveFileLookup", "true")
+        .parquet(*[os.path.join(table.root, f) for f in files])
+        .schema
+    )
 
 
 @pytest.fixture(scope="module")
@@ -132,3 +138,59 @@ def test_rollback_keeps_the_schema(spark, tmp_path):
     t.rollback(0)
     assert t.latest_manifest()["schema"] is None
     assert t.read(spark) is None
+
+
+def _kb_rows(spark, lo, hi):
+    return spark.range(lo, hi).select(
+        F.col("id").alias("doc_id"),
+        F.pmod(F.col("id"), F.lit(4)).cast("int").alias("kb"),
+        F.concat(F.lit("band"), F.col("id").cast("string")).alias("band_key"),
+    )
+
+
+def test_read_returns_every_row_of_partitioned_appends(spark, tmp_path):
+    """Each ``append(partition_by=...)`` commit is its own hive root;
+    ``read`` returns the rows of all of them, data columns only."""
+    t = SnapshotTable(str(tmp_path / "t"))
+    for lo in (0, 40, 80):
+        t.append(_kb_rows(spark, lo, lo + 40), partition_by=["kb"])
+    df = t.read(spark)
+    assert df.columns == ["doc_id", "band_key"]
+    assert sorted(r.doc_id for r in df.collect()) == list(range(120))
+    assert t.read_since(spark, 1).count() == 80
+    assert t.latest_manifest()["partition_by"] == ["kb"]
+
+
+def test_read_pruned_starts_no_spark_job(spark, tmp_path):
+    t = SnapshotTable(str(tmp_path / "t"))
+    t.append(_kb_rows(spark, 0, 40), partition_by=["kb"])
+    t.append(_kb_rows(spark, 40, 80), partition_by=["kb"])
+    sc = spark.sparkContext
+    sc.setJobGroup("snapshot-pruned-read", "reads only")
+    try:
+        df = t.read_pruned(spark, "kb", [1, 3])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("snapshot-pruned-read") == []
+    assert sorted(r.doc_id for r in df.collect()) == [i for i in range(80) if i % 2]
+
+
+def test_compact_refuses_partitioned_table(spark, tmp_path):
+    """A flat rewrite would hide a partitioned table's rows from pruned
+    reads; the generic compact() points at the layout-keeping one."""
+    t = SnapshotTable(str(tmp_path / "t"))
+    t.append(_kb_rows(spark, 0, 40), partition_by=["kb"])
+    t.append(_kb_rows(spark, 40, 80), partition_by=["kb"])
+    v = t.current_version()
+    with pytest.raises(ValueError, match=r"compact\(\)"):
+        t.compact(spark)
+    assert t.current_version() == v
+
+
+def test_append_keeps_one_partition_layout(spark, tmp_path):
+    t = SnapshotTable(str(tmp_path / "t"))
+    t.append(_kb_rows(spark, 0, 40), partition_by=["kb"])
+    with pytest.raises(ValueError, match="partition"):
+        t.append(_kb_rows(spark, 40, 80))
+    assert t.read(spark).count() == 40

@@ -142,9 +142,8 @@ def test_streaming_near_dup_verified_mode(spark, tmp_path):
 
 def test_streaming_near_dup_partitioned_index(spark, tmp_path):
     """The streaming path composes with the partition-pruned index
-    layout: n_buckets flows through index_kwargs, pairs are identical
-    to the batch operator across micro-batches, and the persisted
-    index carries the hive layout."""
+    layout: pairs are identical to the batch operator across
+    micro-batches, and the persisted index carries the hive layout."""
     import glob
 
     import pyspark.sql.functions as F
@@ -176,7 +175,6 @@ def test_streaming_near_dup_partitioned_index(spark, tmp_path):
         pairs_path=str(tmp_path / "pairs"),
         checkpoint_dir=str(tmp_path / "ck"),
         bucket_cap=10**6,
-        n_buckets=16,
     )
     assert n1 > 0
     expected = {

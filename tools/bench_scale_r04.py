@@ -3,7 +3,6 @@ same job at two parallelism levels on the same input).
 
 Usage:
   python tools/bench_scale_r04.py lsh-ingest <cpus>   # partitioned index ingestion docs/s
-  python tools/bench_scale_r04.py lsh-lookup          # pruned vs flat lookup-batch latency
   python tools/bench_scale_r04.py kmeans <cpus>       # broadcast-centroid k-means rows/s
 
 Each invocation is one fresh Spark session and prints ONE JSON line.
@@ -61,7 +60,7 @@ def lsh_ingest(cpus: int) -> dict:
     batch = docs.filter(F.col("doc_id") >= 2_000_000).persist() # 40 copies = 200k
     n = batch.count()
     seed.count()
-    idx = IncrementalLSHIndex(spark, tempfile.mkdtemp() + "/lsh", n_buckets=16)
+    idx = IncrementalLSHIndex(spark, tempfile.mkdtemp() + "/lsh")
     idx.add(seed)  # corpus state + python-worker warmup
     t0 = time.time()
     pairs = idx.add(batch).count()
@@ -75,111 +74,6 @@ def lsh_ingest(cpus: int) -> dict:
         "wall_s": round(wall, 2),
         "docs_per_s": round(n / wall, 1),
     }
-
-
-def lsh_lookup() -> dict:
-    """After ingesting a 50k-doc corpus, add a 10-doc probe batch:
-    partitioned (n_buckets=64) vs flat layout.  The scale signal is the
-    fraction of index BYTES planned (touched partition dirs vs all) —
-    at production partition sizes that ratio is the IO ratio; at this
-    toy corpus per-directory constants mask most of the wall-time win."""
-    import glob
-    import os
-
-    from edgar_crawler_spark.operators.dedup import IncrementalLSHIndex
-
-    def _tree_bytes(dirs):
-        total = 0
-        for d in dirs:
-            for f in glob.glob(os.path.join(d, "*.parquet")):
-                total += os.path.getsize(f)
-        return total
-
-    spark = get_spark(app_name="lsh-lookup", master="local[8]", shuffle_partitions=8)
-    docs = _docs(spark, 10).persist()
-    docs.count()
-    probe_rows = docs.limit(10).collect()
-    out = {"metric": "lsh_index_lookup", "n_corpus": 50000, "n_probe": 10}
-    for label, buckets in (("flat", 0), ("partitioned", 64)):
-        path = tempfile.mkdtemp() + f"/lsh_{label}"
-        idx = IncrementalLSHIndex(spark, path, n_buckets=buckets)
-        idx.add(docs)
-        walls = []
-        for rep in range(3):
-            # distinct probe ids per rep: re-adding identical ids would
-            # hit the crash-replay dedup path instead of the lookup path
-            p = spark.createDataFrame(
-                [(r.doc_id + 10_000_000 * (rep + 1), r.text) for r in probe_rows],
-                ["doc_id", "text"],
-            )
-            t0 = time.time()
-            idx.add(p).count()
-            walls.append(time.time() - t0)
-        out[label] = {"wall_s_median": round(sorted(walls)[1], 2)}
-        if buckets:
-            leafs = {
-                os.path.dirname(f) for f in glob.glob(path + "/data/*/kb=*/*.parquet")
-            }
-            scanned = idx.last_scan_dirs
-            out[label]["scanned_dirs"] = len(scanned)
-            out[label]["total_dirs"] = len(leafs)
-            out[label]["bytes_ratio"] = round(
-                _tree_bytes(scanned) / max(1, _tree_bytes(leafs)), 3
-            )
-    spark.stop()
-    return out
-
-
-def lsh_dispose() -> dict:
-    """Verified (min_sim) lookup against a 50k-doc corpus: the dispose
-    leg needs member docs' band rows across ALL bands.  Flat layout
-    scans the whole index for them; the _bydoc twin (doc-hash
-    partitions) prunes to the members' buckets.  Scale signal = the
-    fraction of twin BYTES planned by the dispose leg."""
-    import glob
-    import os
-
-    from edgar_crawler_spark.operators.dedup import IncrementalLSHIndex
-
-    def _tree_bytes(dirs):
-        total = 0
-        for d in dirs:
-            for f in glob.glob(os.path.join(d, "*.parquet")):
-                total += os.path.getsize(f)
-        return total
-
-    spark = get_spark(app_name="lsh-dispose", master="local[8]", shuffle_partitions=8)
-    docs = _docs(spark, 10).persist()
-    docs.count()
-    probe_rows = docs.limit(10).collect()
-    out = {"metric": "lsh_index_dispose", "n_corpus": 50000, "n_probe": 10, "min_sim": 0.5}
-    for label, buckets in (("flat", 0), ("partitioned", 64)):
-        path = tempfile.mkdtemp() + f"/lshd_{label}"
-        idx = IncrementalLSHIndex(spark, path, n_buckets=buckets, min_sim=0.5)
-        idx.add(docs)
-        walls = []
-        for rep in range(3):
-            p = spark.createDataFrame(
-                [(r.doc_id + 10_000_000 * (rep + 1), r.text) for r in probe_rows],
-                ["doc_id", "text"],
-            )
-            t0 = time.time()
-            idx.add(p).count()
-            walls.append(time.time() - t0)
-        out[label] = {"wall_s_median": round(sorted(walls)[1], 2)}
-        if buckets:
-            twin_leafs = {
-                os.path.dirname(f)
-                for f in glob.glob(path + "/_bydoc/data/*/db=*/*.parquet")
-            }
-            scanned = idx.last_dispose_dirs
-            out[label]["dispose_dirs"] = len(scanned)
-            out[label]["twin_total_dirs"] = len(twin_leafs)
-            out[label]["dispose_bytes_ratio"] = round(
-                _tree_bytes(scanned) / max(1, _tree_bytes(twin_leafs)), 3
-            )
-    spark.stop()
-    return out
 
 
 def kmeans(cpus: int) -> dict:
@@ -457,10 +351,6 @@ def main():
     mode = sys.argv[1]
     if mode == "lsh-ingest":
         print(json.dumps(lsh_ingest(int(sys.argv[2]))))
-    elif mode == "lsh-lookup":
-        print(json.dumps(lsh_lookup()))
-    elif mode == "lsh-dispose":
-        print(json.dumps(lsh_dispose()))
     elif mode == "kmeans":
         print(json.dumps(kmeans(int(sys.argv[2]))))
     elif mode == "kmeans-mb":
