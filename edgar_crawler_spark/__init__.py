@@ -7,7 +7,7 @@ DataFrame engine:
 
 * ``frontier/``  — URL canonicalization, xxhash64 URL-seen (partitioned
   Bloom pre-filter + exact anti-join), per-host priority queues, token
-  bucket politeness, salted-host repartitioning, snapshot-committed
+  bucket politeness over a host-hash fetch repartition, snapshot-committed
   state tables (Iceberg-layout over parquet).
 * ``operators/`` — the reference's relational dataflow (SURVEY.md §2:
   projections, filters, joins, ordering, aggregation) plus
@@ -18,7 +18,8 @@ DataFrame engine:
   per-document Python, invoked only through Arrow-batched pandas UDFs.
 * ``extract/``   — the mapInPandas extraction pipeline producing the
   long-form items table.
-* ``plans/``     — end-to-end pipelines (seed → crawl → extract).
+* ``plans/``     — the stages around the crawl (enrichment, near-dup
+  pass, extraction from the frontier's tables).
 """
 
 __version__ = "0.1.0"

@@ -10,8 +10,8 @@ no UDF, no driver loop — so generation itself is a distributed job
 that would produce a 10^10-row frontier on a real cluster.
 
 Host skew is deliberate: host0 holds ~50% of rows (hot host), the other
-7 hosts split the rest — this exercises the salted-repartition skew
-handling (SURVEY.md §4.3).
+7 hosts split the rest — this exercises the host-hash fetch
+repartition's skew handling (SURVEY.md §4.3).
 """
 
 from __future__ import annotations

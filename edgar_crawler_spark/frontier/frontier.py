@@ -256,27 +256,27 @@ class CrawlFrontier:
         when unstamped)."""
         return (manifest.get("metrics") or {}).get("seen_version")
 
-    def _refiltered_pending(self) -> DataFrame | None:
+    def _refiltered_pending(self) -> tuple[DataFrame | None, bool]:
         """Read the pending table and re-filter vs seen unless its
         ``seen_version`` stamp is seen's current version — makes
-        crash-recovery idempotent. The persisted Bloom pre-filter keeps
-        this exact (maybe → exact recheck) while the definitely-new
-        bulk skips the seen scan; filter ⊇ seen (commit protocol step
-        2-before-3) guarantees no false negative can re-admit a
-        fetched URL."""
+        crash-recovery idempotent. Returns (pending, whether it was
+        re-filtered). The persisted Bloom pre-filter keeps this exact
+        (maybe → exact recheck) while the definitely-new bulk skips the
+        seen scan; filter ⊇ seen (commit protocol step 2-before-3)
+        guarantees no false negative can re-admit a fetched URL."""
         pm = self.pending.latest_manifest()
         pending = self.pending.read(self.spark, pm["version"])
         if pending is None:
-            return None
+            return None, False
         seen_v = self.seen.current_version()
         if self._seen_stamp(pm) == seen_v:
-            return pending
+            return pending, False
         seen_df = self.seen.read(self.spark, seen_v)
         if seen_df is not None:
             pending = url_seen_anti_join(
                 pending, seen_df, bloom=self.seen_filter.read_filter(self.spark)
             )
-        return pending
+        return pending, True
 
     def _clear_pending(self, deferred: DataFrame) -> None:
         """Overwrite pending with the undispatched rows of a wave that
@@ -493,36 +493,16 @@ class CrawlFrontier:
         self.metrics.append(m)
         return m
 
-    def step(self) -> dict | None:
-        """Run one wave synchronously; returns its metrics dict, or
-        None if drained."""
-        pending = self._refiltered_pending()
-        if pending is None or pending.isEmpty():
-            # cheap limit-1 probe: a drained frontier costs one tiny
-            # job, not a full (empty) fetch wave
-            return None
-        ctx = self._fetch_phase(pending)
-        if ctx["n_dispatched"] == 0:
-            ctx["results"].unpersist()
-            # unconditional: an empty deferred set must still clear the
-            # stale pending snapshot (ADVICE r01 nit)
-            self._clear_pending(ctx["deferred"])
-            ctx["work"].unpersist()
-            return None
-        self.last_wave += 1
-        m = self._commit_phase(self.last_wave, ctx)
-        ctx["results"].unpersist()
-        ctx["work"].unpersist()
-        return m
+    def _eager_checkpoint(self) -> bool:
+        """Whether a wave boundary checkpoints its chained remainder
+        eagerly: on every master but a local one (see ``run``)."""
+        return not self.spark.sparkContext.master.startswith("local")
 
-    def run(
-        self,
-        max_waves: int = 100,
-        pipeline: bool | None = None,
-        pipeline_eager_checkpoint: bool | None = None,
-    ) -> list[dict]:
-        """Drain the frontier. With ``pipeline=True``, wave
-        N+1's fetch overlaps wave N's commits: commits run on ONE
+    def run(self, max_waves: int = 100) -> list[dict]:
+        """Drain the frontier, at most ``max_waves`` waves; returns the
+        committed waves' metrics.
+
+        Wave N+1's fetch overlaps wave N's commits: commits run on ONE
         background thread (strictly ordered — only the latest snapshot
         can ever be partial, which is what ``_recover`` assumes) while
         the main thread prioritizes and fetches the next wave from the
@@ -531,45 +511,30 @@ class CrawlFrontier:
         remainder by construction — and the pending-table overwrite
         stays the last step of each wave's commit, so a crash anywhere
         leaves a pending snapshot whose stale rows the resume-time
-        re-filter drops. Crash-safety is identical to step()-by-step
-        execution; only idle driver time is removed.
+        re-filter drops.
 
         The chained remainder's lineage passes through wave N's
         nondeterministic fetch, so it must never be silently
         recomputable: each wave boundary cuts lineage with a
-        ``localCheckpoint``.  On a local master the checkpoint is LAZY
+        ``localCheckpoint``. On a local master the checkpoint is LAZY
         (materialized by wave N+1's first job — cache eviction spills
         to disk locally and never recomputes, so laziness is free); on
-        a multi-executor cluster it is EAGER — the remainder's rows are
-        pinned in checkpoint blocks *before* the commit thread starts
-        publishing wave N, so a lost executor surfaces as a loud
-        missing-checkpoint-block failure (recover by re-running from
-        the committed tables, the normal crash path) instead of a
-        silent re-fetch that could diverge from what was committed
-        (the r02 ADVICE hazard that used to gate pipelining to local
-        masters — gate now dropped).  ``pipeline_eager_checkpoint``
-        overrides the master-based default, mainly for tests."""
-        if pipeline is None:
-            pipeline = True
-        if pipeline_eager_checkpoint is None:
-            pipeline_eager_checkpoint = not self.spark.sparkContext.master.startswith(
-                "local"
-            )
-        if not pipeline:
-            out = []
-            for _ in range(max_waves):
-                m = self.step()
-                if m is None:
-                    break
-                out.append(m)
-                if self.compact_every and m["wave"] % self.compact_every == 0:
-                    self.compact()
-            return out
+        a multi-executor cluster it is EAGER (``_eager_checkpoint``) —
+        the remainder's rows are pinned in checkpoint blocks *before*
+        the commit thread starts publishing wave N, so a lost executor
+        surfaces as a loud missing-checkpoint-block failure (recover by
+        re-running from the committed tables, the normal crash path)
+        instead of a silent re-fetch that could diverge from what was
+        committed.
 
+        A run that dispatches nothing rewrites pending only when its
+        read re-filtered it (seen moved past the snapshot's stamp); a
+        drained, stamped frontier commits nothing."""
         from concurrent.futures import ThreadPoolExecutor
 
+        eager = self._eager_checkpoint()
         out: list[dict] = []
-        pending = self._refiltered_pending()
+        pending, refiltered = self._refiltered_pending()
         commit_fut = None
         prev_ctx = None
         with ThreadPoolExecutor(max_workers=1) as commit_pool:
@@ -587,9 +552,10 @@ class CrawlFrontier:
                         self.compact()
                 if ctx["n_dispatched"] == 0:
                     # a committed wave already wrote this (empty)
-                    # remainder; only a run that committed nothing still
-                    # has stale re-filtered rows to clear
-                    if not out:
+                    # remainder, and a snapshot read back unfiltered
+                    # already holds it; only a re-filtered read can
+                    # leave stale rows to clear
+                    if not out and refiltered:
                         self._clear_pending(ctx["deferred"])
                     ctx["results"].unpersist()
                     ctx["work"].unpersist()
@@ -610,7 +576,7 @@ class CrawlFrontier:
                 # fetch partition concurrently, two independent
                 # re-fetches could publish diverging results. Order:
                 # pin the remainder first, publish second.
-                if pipeline_eager_checkpoint:
+                if eager:
                     pending = ctx["next_pending"].localCheckpoint(eager=True)
                     commit_fut = commit_pool.submit(self._commit_phase, wave_no, ctx)
                 else:

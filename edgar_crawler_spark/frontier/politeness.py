@@ -7,7 +7,7 @@ time (download_filings.py:176-190) — with a urllib3 Retry stack
 download_filings.py:805-848) and an outer 5-attempt loop re-fetching
 while the body contains the SEC throttle banner
 (download_filings.py:486-509). In the distributed engine every host's
-queue lives in exactly one partition per wave (salted host-hash
+queue lives in exactly one partition per wave (host-hash
 repartition), which makes the 10-req/s SEC budget *partition-local*:
 a plain in-process token bucket enforces it with no cluster-global
 coordinator (SURVEY.md §4.3.1).

@@ -58,15 +58,3 @@ def with_priority(df: DataFrame, type_col: str = "type", date_col: str = "date")
         F.col("priority.seq").asc(),
     )
     return df.withColumn("host_rank", F.row_number().over(w))
-
-
-def salted_host_repartition(df: DataFrame, num_partitions: int, salt_buckets: int = 1) -> DataFrame:
-    """Partition the frontier so a host's queue lives in exactly one
-    partition per wave (politeness budget becomes partition-local),
-    while *cold* hosts are spread by a salt for balance.
-
-    Hot hosts must NOT be salted (the token bucket needs all of a
-    host's rows in one place), so the salt is a pure function of host:
-    it spreads distinct hosts, it never splits one.
-    """
-    return df.repartition(num_partitions, F.xxhash64("host"))

@@ -336,14 +336,6 @@ def _limited_lengths(freq: dict[int, int], alphabet: int, cap: int = 15) -> list
 # Prefix-coded lengths / distances
 
 
-def _prefix_decode(sym: int, br: _BitReader) -> int:
-    if sym < 4:
-        return sym + 1
-    extra = (sym - 2) >> 1
-    offset = (2 + (sym & 1)) << extra
-    return offset + br.bits(extra) + 1
-
-
 def _prefix_encode(v: int) -> tuple[int, int, int]:
     """value → (symbol, extra_bits_value, extra_bits_count)."""
     if v <= 4:
@@ -358,13 +350,6 @@ def _prefix_encode(v: int) -> tuple[int, int, int]:
 _SHORT_CODE = {}
 for _i, (_dx, _dy) in enumerate(_DIST_MAP):
     _SHORT_CODE.setdefault((_dx, _dy), _i + 1)
-
-
-def _dist_from_code(code: int, xsize: int) -> int:
-    if code > 120:
-        return code - 120
-    dx, dy = _DIST_MAP[code - 1]
-    return max(1, dy * xsize + dx)
 
 
 # --------------------------------------------------------------------------

@@ -164,32 +164,6 @@ def thumbnail_phash(
     return df.mapInPandas(run, out_schema)
 
 
-def resize_images(df: DataFrame, w: int, h: int, bytes_col: str = "bytes") -> DataFrame:
-    """Nearest-neighbour resize, re-encoded as PNG — a real kernel
-    (numpy indexing), shaped like any decode→transform→encode stage."""
-    out_schema = StructType(
-        [f for f in df.schema.fields if f.name != "resized"]
-        + [StructField("resized", BinaryType())]
-    )
-    keep = [f.name for f in df.schema.fields if f.name != "resized"]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from edgar_crawler_spark.functions.imaging import decode_image, encode_png
-
-        for pdf in batches:
-            resized = []
-            for data in pdf[bytes_col]:
-                px = decode_image(bytes(data))
-                ys = (np.arange(h) * px.shape[0]) // h
-                xs = (np.arange(w) * px.shape[1]) // w
-                resized.append(encode_png(px[ys][:, xs]))
-            out = pdf[keep].copy()
-            out["resized"] = pd.Series(resized, dtype=object)
-            yield out
-
-    return df.mapInPandas(run, out_schema)
-
-
 TRANSCODE_SCHEMA_FIELDS = [
     StructField("transcoded", BinaryType()),
     StructField("in_bytes", IntegerType()),

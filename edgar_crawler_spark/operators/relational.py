@@ -33,43 +33,6 @@ def type_filter(df: DataFrame, col: str, allowed: list[str]) -> DataFrame:
     return df.filter(F.col(col).isin(allowed))
 
 
-def semi_filter(df: DataFrame, keys: DataFrame, on: str) -> DataFrame:
-    """P3 (file-sourced CIK list): left-semi join
-    (download_filings.py:453-455)."""
-    return df.join(keys, on=on, how="left_semi")
-
-
-def url_rewrite(df: DataFrame, col: str, pattern: str, replacement: str, out: str) -> DataFrame:
-    """P4: iXBRL URL rewrite as regexp_replace
-    (download_filings.py:700-713)."""
-    return df.withColumn(out, F.regexp_replace(F.col(col), pattern, replacement))
-
-
-def filename_derivation(df: DataFrame) -> DataFrame:
-    """P5 shape: {CIK}_{type-sans-dashes}_{year}_{accession}.{ext}
-    (download_filings.py:716-722), over synthetic columns."""
-    return df.withColumn(
-        "filename",
-        F.concat_ws(
-            "_",
-            F.col("cik"),
-            F.regexp_replace(F.col("type"), r"[-/\\]", ""),
-            F.substring(F.col("date"), 1, 4),
-            F.regexp_extract(F.col("complete_text_file_link"), r"/([^/]+)\.txt$", 1),
-        ),
-    )
-
-
-def null_backfill(df: DataFrame, dim: DataFrame, on: str, cols: list[str]) -> DataFrame:
-    """P6/J4: broadcast-join enrichment + COALESCE back-fill
-    (download_filings.py:649-656)."""
-    dim_renamed = dim.select(on, *[F.col(c).alias(f"__dim_{c}") for c in cols])
-    out = df.join(F.broadcast(dim_renamed), on=on, how="left")
-    for c in cols:
-        out = out.withColumn(c, F.coalesce(F.col(c), F.col(f"__dim_{c}"))).drop(f"__dim_{c}")
-    return out
-
-
 # --- J: joins (download_filings.py:139-158,401-411,571-656) -----------------
 
 def lookup_join(df: DataFrame, dim: DataFrame, on: str, how: str = "left") -> DataFrame:

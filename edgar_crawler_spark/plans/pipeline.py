@@ -1,6 +1,7 @@
-"""End-to-end plans: index walk → frontier crawl → enrichment →
-extraction (the reference's two CLI stages as one dataflow,
-SURVEY.md §3).
+"""The stages around the frontier crawl (SURVEY.md §3): metadata
+enrichment and filename derivation, the post-crawl near-dup pass, and
+extraction over the engine's own state tables. The crawl itself
+(``CrawlFrontier`` submit → run) is driven by ``spark_submit_main.py``.
 """
 
 from __future__ import annotations
@@ -9,8 +10,6 @@ import os
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
-
-from edgar_crawler_spark.frontier.frontier import CrawlFrontier
 
 COMPANY_DIM_COLS = ["sic", "state_of_inc", "state_location", "fiscal_year_end"]
 
@@ -66,27 +65,6 @@ def enrich_metadata(log: DataFrame, dim: DataFrame) -> DataFrame:
     for c in COMPANY_DIM_COLS:
         out = out.withColumn(c, F.coalesce(F.col(c), F.col(f"__dim_{c}"))).drop(f"__dim_{c}")
     return out.withColumn("filename", filename_col(out))
-
-
-def crawl(
-    spark: SparkSession,
-    workdir: str,
-    seed: DataFrame,
-    previously_crawled: DataFrame | None = None,
-    dim: DataFrame | None = None,
-    **frontier_kwargs,
-) -> tuple[CrawlFrontier, DataFrame]:
-    """Stage-1 equivalent: run the frontier to drain, return the
-    frontier and the enriched fetch log in reference crawl order."""
-    fr = CrawlFrontier(spark, workdir, **frontier_kwargs)
-    if previously_crawled is not None:
-        fr.bootstrap_seen(previously_crawled)
-    fr.submit(seed)
-    fr.run()
-    log = fr.fetch_log()
-    if log is not None and dim is not None:
-        log = enrich_metadata(log, dim).orderBy("year", "quarter", "row_seq")
-    return fr, log
 
 
 def caption_near_dups_from_frontier(

@@ -165,10 +165,3 @@ def write_metadata_csv(df: DataFrame, path: str) -> None:
         .option("escape", '"')  # RFC-4180 doubled quotes (pandas-compatible)
         .csv(path)
     )
-
-
-def write_extracted_json(records: DataFrame, path: str) -> None:
-    """S11: extracted records partitioned by filing type
-    (extract_items.py:1179-1186 writes one JSON per filing under a
-    per-type folder; partitionBy gives the same layout)."""
-    records.write.mode("overwrite").partitionBy("filing_type").json(path)

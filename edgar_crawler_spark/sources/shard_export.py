@@ -158,8 +158,8 @@ def export_training_shards_streamed(
     caption_col: str = "caption",
     fmt_col: str = "fmt",
 ) -> DataFrame:
-    """The 100 TB shape of :func:`export_training_shards` +
-    :func:`write_shard_files`, fused: each group kernel STREAMS its tar
+    """The 100 TB shape of :func:`export_training_shards` plus a file
+    writer, fused: each group kernel STREAMS its tar
     members straight to ``{root}/bucketNN/shard-SSSSS.tar`` (tmp +
     atomic rename), hashing as it goes, and returns ONLY the manifest
     row plus a written/skipped status — the archive never exists as a
@@ -349,83 +349,3 @@ def text_shard_manifest(shards: DataFrame) -> DataFrame:
     return shards.select(
         "shard", "n_docs", "n_bins", "n_tokens", "first_id", "last_id"
     ).orderBy("shard")
-
-
-def write_shard_files(shards: DataFrame, root: str) -> dict:
-    """Interchange materialization:
-    ``{root}/bucket{b:02d}/shard-{s:05d}.tar`` per row plus a
-    ``.sha256`` sidecar, written executor-side per partition (the
-    blob_sink discipline: shared storage on a cluster). Because shard
-    bytes are content-addressed, a re-export SKIPS every shard whose
-    sidecar already matches — incremental materialization falls out of
-    determinism: after a crawl wave only the (bucket, shard) tars whose
-    membership changed are rewritten. Returns {written, skipped}
-    (counted via per-partition results, no driver byte collects)."""
-    import os
-
-    rows = shards.select("bucket_idx", "shard", "sha256", "tar_bytes")
-
-    def write_partition(it):
-        written = skipped = 0
-        keys = []
-        for row in it:
-            keys.append((int(row.bucket_idx), int(row.shard)))
-            d = os.path.join(root, f"bucket{row.bucket_idx:02d}")
-            os.makedirs(d, exist_ok=True)
-            base = os.path.join(d, f"shard-{row.shard:05d}.tar")
-            side = base + ".sha256"
-            try:
-                with open(side) as f:
-                    if f.read().strip() == row.sha256 and os.path.exists(base):
-                        skipped += 1
-                        continue
-            except FileNotFoundError:
-                pass
-            with open(base, "wb") as f:
-                f.write(bytes(row.tar_bytes))
-            with open(side, "w") as f:
-                f.write(row.sha256)
-            written += 1
-        yield (written, skipped, keys)
-
-    os.makedirs(root, exist_ok=True)
-    counts = rows.rdd.mapPartitions(write_partition).collect()
-    # reconcile: membership changes can empty a (bucket, shard) group,
-    # whose stale tar + sidecar would otherwise be re-ingested by any
-    # loader globbing the directory. Live keys ride back with the
-    # per-partition counts (bounded metadata, never bytes — and no
-    # second execution of the tar-build pipeline). SAFETY: an EMPTY
-    # manifest skips reconciliation entirely — an upstream bug or an
-    # over-aggressive gate that yields zero shards must not wipe a
-    # previously exported corpus.
-    live = {k for c in counts for k in c[2]}
-    if not live:
-        return {
-            "written": 0,
-            "skipped": 0,
-            "removed_orphans": 0,
-        }
-    removed = 0
-    for bdir in os.listdir(root):
-        if not (bdir.startswith("bucket") and bdir[6:].isdigit()):
-            continue
-        b = int(bdir[6:])
-        for fname in os.listdir(os.path.join(root, bdir)):
-            if not (fname.startswith("shard-") and fname.endswith(".tar")):
-                continue
-            stem = fname[6:-4]
-            if not stem.isdigit():
-                continue
-            s = int(stem)
-            if (b, s) not in live:
-                os.remove(os.path.join(root, bdir, fname))
-                try:
-                    os.remove(os.path.join(root, bdir, fname + ".sha256"))
-                except FileNotFoundError:
-                    pass
-                removed += 1
-    return {
-        "written": sum(c[0] for c in counts),
-        "skipped": sum(c[1] for c in counts),
-        "removed_orphans": removed,
-    }

@@ -92,9 +92,9 @@ def test_wave_refilters_only_after_seen_moved(spark, tmp_path, anti_join_calls, 
     fr = _frontier(spark, tmp_path)
     already_seen = move(spark, fr) or 0
     anti_join_calls["n"] = 0
-    assert fr.step() is not None
+    assert len(fr.run(max_waves=1)) == 1
     assert anti_join_calls["n"] == 1  # the wave after the move re-filters
-    assert fr.step() is None  # drained; its own commit's stamp holds
+    assert fr.run(max_waves=1) == []  # drained; its own commit's stamp holds
     assert anti_join_calls["n"] == 1
     _assert_log_exact(fr, N_SEEDS - N_PRIOR - already_seen)
 
@@ -112,6 +112,22 @@ def test_drain_writes_no_second_empty_pending(spark, tmp_path):
     assert fr.run() == []
     assert fr.pending.current_version() == v + 1
     assert fr.pending.latest_metrics()["seen_version"] == fr.seen.current_version()
+
+
+def test_drained_rerun_commits_nothing(spark, tmp_path, anti_join_calls):
+    """A run over a drained frontier whose pending stamp is seen's
+    current version neither re-filters nor writes another (empty)
+    pending snapshot: reruns on a drained workdir commit nothing."""
+    fr = _frontier(spark, tmp_path)
+    assert len(fr.run()) == 1
+    v, seen_v = fr.pending.current_version(), fr.seen.current_version()
+    anti_join_calls["n"] = 0
+    assert fr.run() == []
+    assert CrawlFrontier(spark, str(tmp_path / "wd"), wave_quota=100).run() == []
+    assert fr.pending.current_version() == v
+    assert fr.seen.current_version() == seen_v
+    assert anti_join_calls["n"] == 0
+    _assert_log_exact(fr, N_SEEDS - N_PRIOR)
 
 
 def _plan_node_names_since(spark, before: int) -> list[str]:

@@ -34,7 +34,7 @@ def test_crash_between_log_and_seen_commits_recovers_exactly(spark, tmp_path):
     fr = CrawlFrontier(spark, wd, wave_quota=3)  # several waves
     seed = seed_index_df(spark, N)
     fr.submit(seed)
-    fr.step()  # wave 1 commits cleanly
+    fr.run(max_waves=1)  # wave 1 commits cleanly
 
     orig_append = SnapshotTable.append
 
@@ -46,7 +46,7 @@ def test_crash_between_log_and_seen_commits_recovers_exactly(spark, tmp_path):
     SnapshotTable.append = exploding_seen_append
     try:
         with pytest.raises(_Boom):
-            fr.step()  # wave 2: log+payload commit, seen crashes
+            fr.run(max_waves=1)  # wave 2: log+payload commit, seen crashes
     finally:
         SnapshotTable.append = orig_append
 
@@ -88,9 +88,9 @@ def test_crash_between_seen_and_pending_recovers_exactly(spark, tmp_path):
 
     SnapshotTable.overwrite = exploding_pending_overwrite
     try:
-        fr.step()
+        fr.run(max_waves=1)
         with pytest.raises(_Boom):
-            fr.step()
+            fr.run(max_waves=1)
     finally:
         SnapshotTable.overwrite = orig_overwrite
 
@@ -105,7 +105,7 @@ def test_crash_between_seen_and_pending_recovers_exactly(spark, tmp_path):
 
 def test_bloom_incremental_no_full_rebuild(spark, tmp_path):
     """The per-wave filter maintenance ORs in only new hashes: the
-    full-scan BloomFilterTable.build must NOT run during submit/step
+    full-scan BloomFilterTable.build must NOT run during submit/run
     once the filter table exists, the filter-table version advances
     every wave, and the final dedup behavior stays exact."""
     wd = str(tmp_path / "wd")

@@ -1,5 +1,5 @@
-"""Ticker dimension resolution, metadata CSV round-trip, JSON sink
-layout, URL canonicalization edge cases."""
+"""Ticker dimension resolution, metadata CSV round-trip, URL
+canonicalization edge cases."""
 
 import json
 import os
@@ -11,7 +11,6 @@ from edgar_crawler_spark.sources.dims import (
     read_metadata_csv,
     resolve_tickers,
     ticker_cik_dim,
-    write_extracted_json,
     write_metadata_csv,
 )
 
@@ -48,19 +47,6 @@ def test_metadata_csv_roundtrip(spark, tmp_path):
     assert len(back) == 1
     assert back[0]["Company"] == 'SANDISK, "CORP"'  # quoting survives
     assert back[0]["SIC"] is None  # NaN → None semantics
-
-
-def test_extracted_json_sink_partitioned(spark, tmp_path):
-    from edgar_crawler_spark.extract.spark_extract import extract_records
-    from edgar_crawler_spark.fixtures.raw_documents import raw_documents_df
-
-    recs = extract_records(raw_documents_df(spark, 9))
-    out = str(tmp_path / "extracted")
-    write_extracted_json(recs, out)
-    types = {d for d in os.listdir(out) if d.startswith("filing_type=")}
-    assert types == {"filing_type=10-K", "filing_type=10-Q", "filing_type=8-K"}
-    rt = spark.read.json(out + "/filing_type=10-K")
-    assert rt.count() == 3
 
 
 def test_url_canonicalization_edges(spark):

@@ -99,7 +99,7 @@ def test_payload_invariants_pixel_and_caption(spark, run):
 
 def test_resume_idempotent(spark, run):
     """Re-submitting the same seed after a completed run admits 0 rows
-    and a further step() drains immediately (kill-and-resume safety)."""
+    and a further run() drains immediately (kill-and-resume safety)."""
     fr, seed, *_ = run
     assert fr.submit(seed) == 0
-    assert fr.step() is None
+    assert fr.run(max_waves=1) == []

@@ -39,11 +39,15 @@ def _pairset(df):
 
 def test_incremental_equals_batch(spark, tmp_path):
     rows = _corpus()
-    idx = IncrementalHammingIndex(spark, str(tmp_path / "hi"), max_hamming=6)
+    path = str(tmp_path / "hi")
+    idx = IncrementalHammingIndex(spark, path, max_hamming=6)
     got = set()
     k = len(rows) // 3
-    for batch in (rows[:k], rows[k : 2 * k], rows[2 * k :]):
-        got |= _pairset(idx.add(_mk(spark, batch)))
+    got |= _pairset(idx.add(_mk(spark, rows[:k])))
+    got |= _pairset(idx.add(_mk(spark, rows[k : 2 * k])))
+    # a later drop-in batch: a new index object over the same path
+    idx = IncrementalHammingIndex(spark, path, max_hamming=6)
+    got |= _pairset(idx.add(_mk(spark, rows[2 * k :])))
     want = _pairset(
         hamming_near_dup_pairs(_mk(spark, rows), "image_id", "phash", 64, 6)
     )

@@ -157,7 +157,7 @@ def test_http_resubmit_is_noop(spark, tmp_path, http_server):
         rate_per_host=10_000.0, virtual_clock=False, wave_quota=10**9,
     )
     assert fr2.submit(_localhost_seeds(spark, port)) == 0
-    assert fr2.step() is None
+    assert fr2.run(max_waves=1) == []
 
 
 OVERSIZE_DECLARED_I = 3  # Content-Length over the cap (pre-body abort)

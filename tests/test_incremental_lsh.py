@@ -22,9 +22,13 @@ def test_incremental_equals_batch(spark, tmp_path):
         for r in minhash_lsh_pairs(full, bucket_cap=10**6).collect()
     }
 
-    idx = IncrementalLSHIndex(spark, str(tmp_path / "lsh"), bucket_cap=10**6)
+    path = str(tmp_path / "lsh")
+    idx = IncrementalLSHIndex(spark, path, bucket_cap=10**6)
     got = set()
     for lo, hi in [(0, 40), (40, 80), (80, 120)]:
+        if lo == 80:
+            # a later drop-in batch: a new index object over the same path
+            idx = IncrementalLSHIndex(spark, path, bucket_cap=10**6)
         pairs = idx.add(_docs(spark, lo, hi))
         batch_pairs = {(r.doc_a, r.doc_b) for r in pairs.collect()}
         # every emitted pair touches the new batch

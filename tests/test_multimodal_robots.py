@@ -1,4 +1,4 @@
-"""Multimodal operators (decode/validate, resize, stubs) and the
+"""Multimodal operators (decode/validate, stubs) and the
 robots gate wired into the fetch scheduler."""
 
 import numpy as np
@@ -14,7 +14,6 @@ from edgar_crawler_spark.functions.imaging import decode_image
 from edgar_crawler_spark.operators.multimodal import (
     decode_and_validate,
     extract_audio_features,
-    resize_images,
     sample_video_frames,
 )
 
@@ -37,14 +36,6 @@ def test_decode_poisoned_blob_recorded_not_thrown(spark):
     out = decode_and_validate(df).toPandas()
     assert out.decode_ok.iloc[0] != "ok"
     assert out.w.isna().all()
-
-
-def test_resize_images_real_kernel(spark):
-    df = payload_df(spark, 6)
-    out = resize_images(df, 8, 8).toPandas()
-    for _, r in out.iterrows():
-        px = decode_image(bytes(r.resized))
-        assert px.shape == (8, 8, 3)
 
 
 def test_image_stats_analytic_values(spark):
@@ -405,7 +396,7 @@ def test_robots_gate_through_frontier(spark, tmp_path):
         spark, str(tmp_path / "w"), robots_fetcher=robots, max_attempts=1
     )
     fr.submit(seed_index_df(spark, 40, n_hosts=4, hot_host=False))
-    fr.run(pipeline=False)
+    fr.run()
     log = fr.fetch_log().toPandas()
     assert len(log) == 40
     blocked = log[log.host == "host0.test"]

@@ -67,7 +67,7 @@ def test_crash_between_seen_and_pending_no_duplicate_failed_rows(spark, tmp_path
 
     fr.pending.overwrite = crash
     with pytest.raises(RuntimeError, match="injected crash"):
-        fr.run(pipeline=False)
+        fr.run()
 
     fr2 = CrawlFrontier(spark, wd, fetcher=always_fail_fetcher, max_attempts=1)
     assert fr2.run() == []  # nothing re-dispatches

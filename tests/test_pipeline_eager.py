@@ -35,7 +35,7 @@ def test_eager_checkpoint_pins_remainder_against_cache_loss(spark, tmp_path):
     )
     fr.submit(seed_index_df(spark, 60, n_hosts=4, hot_host=False))
 
-    pending = fr._refiltered_pending()
+    pending, _ = fr._refiltered_pending()
     ctx = fr._fetch_phase(pending)
     pend = ctx["next_pending"].localCheckpoint(eager=True)
 
@@ -54,32 +54,32 @@ def test_eager_checkpoint_pins_remainder_against_cache_loss(spark, tmp_path):
     assert m["dispatched"] == 20  # 4 hosts × wave_quota 5
 
 
-def test_pipeline_eager_equals_step_mode(spark, tmp_path):
-    """End-to-end: pipeline=True with the eager (cluster-default)
-    checkpoint must publish exactly what step mode publishes — same
-    crawl order, same seen set — with every URL fetched exactly once."""
+def test_pipeline_eager_equals_lazy(spark, tmp_path, monkeypatch):
+    """End-to-end: the eager (cluster-default) wave-boundary checkpoint
+    must publish exactly what the lazy (local-default) one publishes —
+    same crawl order, same seen set — with every URL fetched exactly
+    once."""
     n = 60
 
-    def run_mode(sub: str, **kwargs):
+    def run_mode(sub: str, eager: bool):
+        monkeypatch.setattr(CrawlFrontier, "_eager_checkpoint", lambda self: eager)
         count_file = str(tmp_path / f"calls_{sub}.txt")
         wd = str(tmp_path / sub)
         fr = CrawlFrontier(
             spark, wd, fetcher=_counting_fetcher(count_file), wave_quota=7
         )
         fr.submit(seed_index_df(spark, n, n_hosts=4, hot_host=False))
-        fr.run(**kwargs)
+        assert len(fr.run()) > 1
         log = fr.fetch_log().toPandas()
         seen = {r.url_hash for r in fr.seen_set().collect()}
         calls = sum(1 for _ in open(count_file)) if os.path.exists(count_file) else 0
         return log, seen, calls
 
-    log_e, seen_e, calls_e = run_mode(
-        "eager", pipeline=True, pipeline_eager_checkpoint=True
-    )
-    log_s, seen_s, calls_s = run_mode("step", pipeline=False)
+    log_e, seen_e, calls_e = run_mode("eager", True)
+    log_l, seen_l, calls_l = run_mode("lazy", False)
 
-    assert calls_e == calls_s == n  # exactly-once fetch in both modes
-    assert seen_e == seen_s and len(seen_e) == n
+    assert calls_e == calls_l == n  # exactly-once fetch in both modes
+    assert seen_e == seen_l and len(seen_e) == n
     order_cols = ["year", "quarter", "row_seq"]
-    assert log_e[order_cols].values.tolist() == log_s[order_cols].values.tolist()
-    assert (log_e["state"] == "fetched").all()
+    assert log_e[order_cols].values.tolist() == log_l[order_cols].values.tolist()
+    assert (log_e["state"] == "fetched").all() and (log_l["state"] == "fetched").all()

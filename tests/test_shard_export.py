@@ -1,7 +1,7 @@
 """WebDataset-style training-shard export: byte-determinism (the
 sha256 is a content address), member round-trip against the payload
-table in exact pack order, manifest consistency, and the interchange
-file materialization."""
+table in exact pack order, manifest consistency, and the streamed
+file materialization (content-addressed skip, orphan reconcile)."""
 
 import io
 import tarfile
@@ -78,7 +78,7 @@ def test_reexport_is_byte_identical(spark, exported):
     assert (a == b).all()
 
 
-def test_write_shard_files_layout(spark, tmp_path, exported):
+def test_write_shard_files_layout(spark, tmp_path):
     import glob
     import os
 
@@ -86,30 +86,33 @@ def test_write_shard_files_layout(spark, tmp_path, exported):
     from edgar_crawler_spark.operators.multimodal import pack_image_batches
     from edgar_crawler_spark.sources.shard_export import (
         export_training_shards,
-        write_shard_files,
+        write_shard_files_streamed,
     )
+
+    def counts(res):
+        return {k: res[k] for k in ("written", "skipped", "removed_orphans")}
 
     pay = payload_df(spark, 100)
     asg = pack_image_batches(
         pay, buckets=[(32, 32)], batch_px_budget=8192, n_shards=2,
     )
-    shards = export_training_shards(pay, asg).localCheckpoint()
-    first = write_shard_files(shards, str(tmp_path / "wds"))
-    files = sorted(glob.glob(str(tmp_path / "wds" / "bucket*" / "shard-*.tar")))
-    n = shards.count()
+    root = str(tmp_path / "wds")
+    first = write_shard_files_streamed(pay, asg, root)
+    files = sorted(glob.glob(os.path.join(root, "bucket*", "shard-*.tar")))
+    n = export_training_shards(pay, asg).count()
     assert len(files) == n
-    assert first == {"written": n, "skipped": 0, "removed_orphans": 0}
+    assert counts(first) == {"written": n, "skipped": 0, "removed_orphans": 0}
     with tarfile.open(files[0]) as tf:
         assert len(tf.getnames()) > 0
     # content-addressed re-materialization: second pass skips everything
-    again = write_shard_files(shards, str(tmp_path / "wds"))
-    assert again == {"written": 0, "skipped": n, "removed_orphans": 0}
+    again = write_shard_files_streamed(pay, asg, root)
+    assert counts(again) == {"written": 0, "skipped": n, "removed_orphans": 0}
     # corrupt one sidecar -> exactly that shard rewrites
     side = files[0] + ".sha256"
     with open(side, "w") as f:
         f.write("bogus")
-    third = write_shard_files(shards, str(tmp_path / "wds"))
-    assert third == {"written": 1, "skipped": n - 1, "removed_orphans": 0}
+    third = write_shard_files_streamed(pay, asg, root)
+    assert counts(third) == {"written": 1, "skipped": n - 1, "removed_orphans": 0}
     # orphan reconcile: a stale tar from a dropped (bucket, shard) group
     # is deleted (with its sidecar) by the next materialization
     ghost = os.path.join(os.path.dirname(files[0]), "shard-09999.tar")
@@ -117,8 +120,8 @@ def test_write_shard_files_layout(spark, tmp_path, exported):
         f.write(b"stale")
     with open(ghost + ".sha256", "w") as f:
         f.write("stale")
-    fourth = write_shard_files(shards, str(tmp_path / "wds"))
-    assert fourth == {"written": 0, "skipped": n, "removed_orphans": 1}
+    fourth = write_shard_files_streamed(pay, asg, root)
+    assert counts(fourth) == {"written": 0, "skipped": n, "removed_orphans": 1}
     assert not os.path.exists(ghost) and not os.path.exists(ghost + ".sha256")
 
 

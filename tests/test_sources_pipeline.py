@@ -5,7 +5,7 @@ import pytest
 
 from edgar_crawler_spark.fixtures.seed_index import seed_index_df
 from edgar_crawler_spark.frontier.frontier import CrawlFrontier
-from edgar_crawler_spark.plans.pipeline import company_dim_df, crawl, enrich_metadata
+from edgar_crawler_spark.plans.pipeline import company_dim_df, enrich_metadata
 from edgar_crawler_spark.sources.index_source import (
     parse_master_idx,
     quarterly_index_worklist,
@@ -65,7 +65,7 @@ def test_kill_and_resume_mid_crawl(spark, tmp_path):
     wd1 = str(tmp_path / "interrupted")
     fr1 = CrawlFrontier(spark, wd1, wave_quota=5)  # small quota → multiple waves
     fr1.submit(seed)
-    fr1.step()  # wave 1 only, then "crash"
+    fr1.run(max_waves=1)  # wave 1 only, then "crash"
     del fr1
     fr1b = CrawlFrontier(spark, wd1, wave_quota=10**9)  # resume from snapshots
     fr1b.run()
@@ -84,13 +84,13 @@ def test_kill_and_resume_mid_crawl(spark, tmp_path):
 
 
 def test_crawl_plan_end_to_end(spark, tmp_path):
-    fr, log = crawl(
-        spark,
-        str(tmp_path / "c"),
-        seed_index_df(spark, 60),
-        dim=company_dim_df(spark),
-    )
-    pdf = log.toPandas()
+    # the stage-1 dataflow spark_submit_main.py runs: submit → run to
+    # drain → enrich the fetch log
+    fr = CrawlFrontier(spark, str(tmp_path / "c"))
+    fr.submit(seed_index_df(spark, 60))
+    fr.run()
+    log = enrich_metadata(fr.fetch_log(), company_dim_df(spark))
+    pdf = log.orderBy("year", "quarter", "row_seq").toPandas()
     assert len(pdf) == 60
     assert (pdf.state == "fetched").all()
     assert pdf.sic.notna().all() and pdf.filename.notna().all()

@@ -18,7 +18,7 @@ def test_wave_sizes_bounded_and_order_preserved(spark, tmp_path):
         max_wave_rows=cap,
     )
     fr.submit(seed_index_df(spark, n, n_hosts=n_hosts, hot_host=False))
-    waves = fr.run(pipeline=False)
+    waves = fr.run()
     assert sum(w["dispatched"] for w in waves) == n  # full drain
     assert all(w["dispatched"] <= cap for w in waves)
     assert len(waves) >= -(-n // cap)
@@ -40,7 +40,7 @@ def test_host_cohort_rotation_when_hosts_exceed_cap(spark, tmp_path):
         spark, str(tmp_path / "w"), wave_quota=10, max_wave_rows=cap
     )
     fr.submit(seed_index_df(spark, n, n_hosts=n_hosts, hot_host=False))
-    waves = fr.run(pipeline=False, max_waves=100)
+    waves = fr.run(max_waves=100)
     assert sum(w["dispatched"] for w in waves) == n
     assert all(w["dispatched"] <= cap for w in waves)
     log = fr.fetch_log().toPandas()
