@@ -106,8 +106,7 @@ class CrawlFrontier:
         self.payload = SnapshotTable(os.path.join(workdir, "payload"))
         # incrementally-maintained Bloom pre-filter (VERDICT r01 item
         # 3): per-wave cost = insert of the new hashes only; the seen
-        # parquet is scanned only on rebuild (overload / compaction /
-        # invalidate).
+        # parquet is scanned only on rebuild (compaction / invalidate).
         self.seen_filter = PersistedBloomTable(
             SnapshotTable(os.path.join(workdir, "seenfilter")),
             num_shards=bloom_shards,
@@ -144,9 +143,7 @@ class CrawlFrontier:
         if pf is None:
             # migration path: seen exists but no filter table yet —
             # one full build, then incremental forever after
-            self.seen_filter.rebuild(
-                seen_df, expected_per_shard=self.seen_filter.expected_per_shard
-            )
+            self.seen_filter.rebuild(seen_df)
             pf = self.seen_filter.read_filter(self.spark)
         return pf
 
@@ -154,29 +151,32 @@ class CrawlFrontier:
     def bootstrap_seen(self, metadata: DataFrame, url_col: str = "html_index") -> int:
         """Load a pre-existing metadata table as the initial URL-seen
         set (the reference's FILINGS_METADATA.csv read-back,
-        download_filings.py:139-158)."""
+        download_filings.py:139-158). The rows are evaluated once:
+        persisted for the count, the filter update and the seen
+        append."""
         rows = (
             with_url_identity(metadata, url_col)
             .select("url_hash", "canonical_url")
             .dropDuplicates()
             .withColumn("first_seen_version", F.lit(0).cast("long"))
-        )
+        ).persist()
         n = rows.count()
         if n:
             # filter before seen: preserves the filter ⊇ seen invariant
             self.seen_filter.update(rows, metrics={"bootstrap": n})
             self.seen.append(rows, metrics={"bootstrap": n})
+        rows.unpersist()
         return n
 
     def invalidate(self, urls: DataFrame, url_col: str = "html_index") -> int:
         """Remove URLs from the seen set so they can be re-crawled
         (content invalidated / requeue). Seen is rewritten without the
         rows FIRST, then the Bloom filter is rebuilt from the rewritten
-        seen table at its current capacity, so the filter tracks seen
-        exactly again. The order keeps filter ⊇ seen through a crash:
-        until the rebuild commits, the old filter covers the old seen
-        set, which covers the new one (the stale bits are harmless
-        false positives). Administrative op: both rewrites are
+        seen table, one layer per shard sized from it, so the filter
+        tracks seen exactly again. The order keeps filter ⊇ seen
+        through a crash: until the rebuild commits, the old filter
+        covers the old seen set, which covers the new one (the stale
+        bits are harmless false positives). Administrative op: both rewrites are
         full-table commits — batch invalidations, don't loop them."""
         ids = (
             with_url_identity(urls, url_col)
@@ -197,11 +197,7 @@ class CrawlFrontier:
                 ids, on=["url_hash", "canonical_url"], how="left_anti"
             )
             self.seen.overwrite(remaining, metrics={"invalidated": n})
-            self.seen_filter.rebuild(
-                self.seen.read(self.spark),
-                expected_per_shard=self.seen_filter.expected_per_shard,
-                metrics={"invalidated": n},
-            )
+            self.seen_filter.rebuild(self.seen.read(self.spark), metrics={"invalidated": n})
         ids.unpersist()
         return n
 
@@ -260,16 +256,20 @@ class CrawlFrontier:
         """Read the pending table and re-filter vs seen unless its
         ``seen_version`` stamp is seen's current version — makes
         crash-recovery idempotent. Returns (pending, whether it was
-        re-filtered). The persisted Bloom pre-filter keeps this exact
-        (maybe → exact recheck) while the definitely-new bulk skips the
-        seen scan; filter ⊇ seen (commit protocol step 2-before-3)
-        guarantees no false negative can re-admit a fetched URL."""
+        re-filtered); pending is None when there is nothing to run,
+        including a drained snapshot (0 rows recorded, stamp current),
+        which is answered from its manifest without a Spark job. The
+        persisted Bloom pre-filter keeps this exact (maybe → exact
+        recheck) while the definitely-new bulk skips the seen scan;
+        filter ⊇ seen (commit protocol step 2-before-3) guarantees no
+        false negative can re-admit a fetched URL."""
         pm = self.pending.latest_manifest()
         pending = self.pending.read(self.spark, pm["version"])
-        if pending is None:
-            return None, False
         seen_v = self.seen.current_version()
-        if self._seen_stamp(pm) == seen_v:
+        stamped = self._seen_stamp(pm) == seen_v
+        if pending is None or (stamped and pm.get("rows") == 0):
+            return None, False
+        if stamped:
             return pending, False
         seen_df = self.seen.read(self.spark, seen_v)
         if seen_df is not None:
@@ -314,12 +314,9 @@ class CrawlFrontier:
         if not self.max_wave_rows:
             return pred
         # cumulative rows per rank depth: ≤ wave_quota rows to the driver
-        counts = (
-            work.filter(pred)
-            .groupBy("host_rank")
-            .agg(F.count("*").alias("n"))
-            .orderBy("host_rank")
-            .collect()
+        counts = sorted(
+            work.filter(pred).groupBy("host_rank").agg(F.count("*").alias("n")).collect(),
+            key=lambda r: r["host_rank"],
         )
         cum, depth = 0, 0
         for r in counts:
@@ -529,7 +526,8 @@ class CrawlFrontier:
 
         A run that dispatches nothing rewrites pending only when its
         read re-filtered it (seen moved past the snapshot's stamp); a
-        drained, stamped frontier commits nothing."""
+        drained, stamped frontier commits nothing and, when its pending
+        manifest records 0 rows, starts no Spark job."""
         from concurrent.futures import ThreadPoolExecutor
 
         eager = self._eager_checkpoint()
@@ -624,13 +622,13 @@ class CrawlFrontier:
 
     def compact(self, target_partitions: int | None = None) -> None:
         """Fold accumulated per-wave appends in seen/log/payload into
-        single-dir snapshots (scan-planning hygiene for long crawls)."""
+        single-dir snapshots (scan-planning hygiene for long crawls),
+        and fold the Bloom filter's layers back into one per shard,
+        sized from the compacted seen table (the filter's one
+        sanctioned full-scan rebuild besides invalidation, amortized
+        into the pass that rewrites seen anyway)."""
         for table in (self.seen, self.log, self.payload):
             table.compact(self.spark, target_partitions)
-        # the one sanctioned full-scan filter rebuild: only when shards
-        # have outgrown their sized capacity (fpp decay), amortized
-        # into the compaction pass
-        if self.seen_filter.max_load(self.spark) > 1.0:
-            seen_df = self.seen.read(self.spark)
-            if seen_df is not None:
-                self.seen_filter.rebuild(seen_df, metrics={"compaction": True})
+        seen_df = self.seen.read(self.spark)
+        if seen_df is not None:
+            self.seen_filter.rebuild(seen_df, metrics={"compaction": True})

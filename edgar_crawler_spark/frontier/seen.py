@@ -9,11 +9,19 @@ filter in front:
 
 * BUILD — seen urls hashed (xxhash64), sharded by
   ``pmod(url_hash, num_shards)``; each shard's bitset built by an
-  Arrow-batched applyInPandas (numpy bit ops). One row per shard:
-  (shard, bitset binary, n_items, m_bits, k_hashes).
+  Arrow-batched applyInPandas (numpy bit ops). A shard is one row per
+  layer: (shard, bitset binary, n_items, m_bits, k_hashes).
+* GROW — the persisted filter is a per-shard scalable Bloom filter
+  (Almeida et al., IPL 2007): a shard's first layer is sized from its
+  first batch; a batch that would overfill the newest layer starts a
+  new one with at least twice its capacity and one more hash (half its
+  false-positive rate), so bytes follow the seen set and the compound
+  rate stays under target. A layer's capacity is read from its stored
+  (m_bits, k_hashes), never from a constructor value.
 * CHECK — candidates repartitioned by the same shard key, cogrouped
-  with the bloom table (each bitset travels to exactly one partition —
-  never broadcast, never per-row), membership tested vectorized.
+  with the bloom table (each shard's layers travel to exactly one
+  partition — never broadcast, never per-row), membership tested
+  vectorized; "maybe" if any layer of the shard says so.
 * FP SAFETY — Bloom "no" ⇒ definitely-new, emitted directly; Bloom
   "maybe" ⇒ exact anti-join recheck against the seen table. A false
   positive therefore costs one extra join probe and can never silently
@@ -75,8 +83,38 @@ def _positions(hashes: np.ndarray, m: int, k: int) -> np.ndarray:
     return (h1[None, :] + i * h2[None, :]) % np.uint64(m)  # (k, n)
 
 
+def _set_bits(bits: np.ndarray, hashes: np.ndarray, m: int, k: int) -> None:
+    """OR the k positions of every hash into ``bits`` (in place)."""
+    pos = _positions(hashes, m, k).ravel()
+    np.bitwise_or.at(bits, (pos >> 3).astype(np.int64), (1 << (pos & 7)).astype(np.uint8))
+
+
+def _hits(bits: np.ndarray, hashes: np.ndarray, m: int, k: int) -> np.ndarray:
+    """Per hash: whether all k of its positions are set."""
+    pos = _positions(hashes, m, k)  # (k, n)
+    return ((bits[(pos >> 3).astype(np.int64)] >> (pos & 7).astype(np.uint8)) & 1).all(axis=0)
+
+
+# smallest first layer of a persisted shard, in items
+_LAYER_FLOOR = 64
+
+
+def _layer_bits(capacity: int, k: int) -> int:
+    """Bits of a layer that holds ``capacity`` items with k hashes at
+    most half full — where its false-positive rate is at most 2^-k."""
+    m = math.ceil(capacity * k / math.log(2))
+    return (m + 63) & ~63
+
+
+def _capacity(m: int, k: int) -> int:
+    """Items a stored layer holds before it passes half full: the
+    inverse of ``_layer_bits``, read from the layer's own geometry."""
+    return int(m * math.log(2) / k + 1e-9)
+
+
 class BloomFilterTable:
-    """A DataFrame of per-shard Bloom bitsets over xxhash64(url)."""
+    """A DataFrame of Bloom bitsets over xxhash64(url), one row per
+    layer of each shard (``build`` makes one layer per shard)."""
 
     def __init__(self, df: DataFrame, num_shards: int):
         self.df = df
@@ -99,8 +137,7 @@ class BloomFilterTable:
         def build_shard(pdf: pd.DataFrame) -> pd.DataFrame:
             bits = np.zeros(m // 8, dtype=np.uint8)
             if len(pdf):
-                pos = _positions(pdf["h"].to_numpy(np.int64), m, k).ravel()
-                np.bitwise_or.at(bits, (pos >> 3).astype(np.int64), (1 << (pos & 7)).astype(np.uint8))
+                _set_bits(bits, pdf["h"].to_numpy(np.int64), m, k)
             shard = int(pdf["shard"].iloc[0]) if len(pdf) else 0
             return pd.DataFrame(
                 [
@@ -123,7 +160,8 @@ class BloomFilterTable:
 
     def maybe_contains(self, candidates: DataFrame, hash_col: str = "url_hash") -> DataFrame:
         """candidates + boolean ``bloom_maybe_seen``. Cogrouped per
-        shard: each bitset meets exactly its own candidate partition."""
+        shard: each shard's layers meet exactly its own candidate
+        partition; a candidate is a maybe if any layer holds it."""
         out_schema = StructType(
             candidates.schema.fields + [StructField("bloom_maybe_seen", BooleanType())]
         )
@@ -133,15 +171,12 @@ class BloomFilterTable:
             if not len(cand_pdf):
                 return pd.DataFrame(columns=cand_cols + ["bloom_maybe_seen"])
             out = cand_pdf[cand_cols].copy()
-            if not len(bloom_pdf):  # no bitset for this shard ⇒ nothing seen
-                out["bloom_maybe_seen"] = False
-                return out
-            row = bloom_pdf.iloc[0]
-            bits = np.frombuffer(row["bitset"], dtype=np.uint8)
-            m, k = int(row["m_bits"]), int(row["k_hashes"])
-            pos = _positions(cand_pdf[hash_col].to_numpy(np.int64), m, k)  # (k, n)
-            hit = (bits[(pos >> 3).astype(np.int64)] >> (pos & 7).astype(np.uint8)) & 1
-            out["bloom_maybe_seen"] = hit.all(axis=0).astype(bool)
+            h = cand_pdf[hash_col].to_numpy(np.int64)
+            hit = np.zeros(len(h), dtype=bool)  # no layer ⇒ nothing seen
+            for row in bloom_pdf.itertuples(index=False):
+                bits = np.frombuffer(row.bitset, dtype=np.uint8)
+                hit |= _hits(bits, h, int(row.m_bits), int(row.k_hashes))
+            out["bloom_maybe_seen"] = hit
             return out
 
         shard = F.pmod(F.col(hash_col), F.lit(self.num_shards)).cast("int")
@@ -151,11 +186,12 @@ class BloomFilterTable:
 
 
 class PersistedBloomTable:
-    """Incrementally-maintained Bloom filter: shard bitsets persisted
-    in a :class:`SnapshotTable`, OR-updated with ONLY the new hashes at
-    each wave commit — the seen table is never re-scanned or re-hashed
-    (VERDICT r01 item 3: the per-submit ``BloomFilterTable.build`` full
-    rebuild was the scale-killer this replaces).
+    """Incrementally-maintained scalable Bloom filter: per-shard layers
+    persisted in a :class:`SnapshotTable`, updated with ONLY the new
+    hashes at each wave commit — the seen table is never re-scanned or
+    re-hashed (VERDICT r01 item 3: the per-submit
+    ``BloomFilterTable.build`` full rebuild was the scale-killer this
+    replaces).
 
     Invariants:
     * filter ⊇ seen — ``update`` is committed strictly BEFORE the seen
@@ -163,26 +199,25 @@ class PersistedBloomTable:
       URL (a miss would skip the exact recheck and re-admit a fetched
       URL). Extra bits from a crash between the two commits are mere
       false positives — the FP direction is safe by construction.
-    * fixed geometry per shard — a shard's (m_bits, k_hashes) are
-      pinned at creation; new hashes OR into the same bitset. When a
-      shard's n_items exceeds its sized capacity the fpp decays, so
-      ``max_load`` > 1 signals a ``rebuild`` (full scan, rare,
-      amortized — e.g. at compaction time).
+    * sized by what it holds — a shard's first layer holds twice its
+      first batch (at least ``_LAYER_FLOOR`` items) at k₀ hashes, where
+      2^-(k₀-1) ≤ fpp. New hashes OR into the newest layer (the one
+      with the most bits); a batch that would take it past capacity
+      starts a layer with at least double the capacity and k+1 hashes,
+      so the layers' rates sum to under 2^-(k₀-1) ≤ fpp. Capacities are
+      derived from each row's stored (m_bits, k_hashes), so a reopened
+      filter grows exactly as the one that wrote it would, and a
+      single-row-per-shard table from before layering reads as a
+      one-layer filter.
     * no deletes — a Bloom bit cannot be cleared, so removing URLs from
-      seen (``CrawlFrontier.invalidate``) rebuilds the bitsets from the
-      rewritten seen table.
+      seen (``CrawlFrontier.invalidate``) rebuilds the layers from the
+      rewritten seen table; ``CrawlFrontier.compact`` rebuilds too,
+      folding every shard back into one layer sized from seen.
     """
 
-    def __init__(
-        self,
-        table,
-        num_shards: int = 32,
-        expected_per_shard: int = 1 << 17,
-        fpp: float = 0.01,
-    ):
+    def __init__(self, table, num_shards: int = 32, fpp: float = 0.01):
         self.table = table
         self.num_shards = num_shards
-        self.expected_per_shard = expected_per_shard
         self.fpp = fpp
 
     def _guard_shard_count(self) -> None:
@@ -209,104 +244,74 @@ class PersistedBloomTable:
         df = self.table.read(spark)
         return BloomFilterTable(df, self.num_shards) if df is not None else None
 
-    def _sharded(self, new: DataFrame, hash_col: str) -> DataFrame:
-        return new.select(
+    def _layered(self, new: DataFrame, hash_col: str, cur: DataFrame | None) -> DataFrame:
+        """Every shard's layers after adding ``new``'s hashes to ``cur``
+        (None: an empty filter). Shards ``new`` does not touch are
+        carried through the cogroup unchanged."""
+        k0 = math.ceil(math.log2(2 / self.fpp))
+
+        def grow(new_pdf: pd.DataFrame, bloom_pdf: pd.DataFrame) -> pd.DataFrame:
+            if not len(new_pdf):
+                return bloom_pdf
+            layers = bloom_pdf.sort_values("m_bits").to_dict("records") if len(bloom_pdf) else []
+            h = new_pdf["h"].to_numpy(np.int64)
+            top = layers[-1] if layers else None
+            if top is None:
+                cap, k = max(_LAYER_FLOOR, 2 * len(h)), k0
+            elif top["n_items"] + len(h) > _capacity(top["m_bits"], top["k_hashes"]):
+                cap = max(2 * _capacity(top["m_bits"], top["k_hashes"]), 2 * len(h))
+                k = int(top["k_hashes"]) + 1
+            else:
+                cap = None  # the batch fits the newest layer
+            if cap is not None:
+                m = _layer_bits(cap, k)
+                top = {
+                    "shard": int(new_pdf["shard"].iloc[0]),
+                    "bitset": bytes(m // 8),
+                    "n_items": 0,
+                    "m_bits": m,
+                    "k_hashes": k,
+                }
+                layers.append(top)
+            bits = np.frombuffer(top["bitset"], dtype=np.uint8).copy()
+            _set_bits(bits, h, int(top["m_bits"]), int(top["k_hashes"]))
+            top["bitset"] = bits.tobytes()
+            top["n_items"] += len(h)
+            return pd.DataFrame(layers, columns=_BLOOM_SCHEMA.fieldNames())
+
+        sharded = new.select(
             F.col(hash_col).alias("h"),
             F.pmod(F.col(hash_col), F.lit(self.num_shards)).cast("int").alias("shard"),
         )
+        if cur is None:
+            empty = pd.DataFrame(columns=_BLOOM_SCHEMA.fieldNames())
+            return sharded.groupBy("shard").applyInPandas(
+                lambda pdf: grow(pdf, empty), _BLOOM_SCHEMA
+            )
+        return (
+            sharded.groupBy("shard")
+            .cogroup(cur.groupBy("shard"))
+            .applyInPandas(grow, _BLOOM_SCHEMA)
+        )
 
     def update(self, new: DataFrame, hash_col: str = "url_hash", metrics: dict | None = None) -> int:
-        """OR the new hashes into the persisted bitsets. Touches only
-        the filter table (KBs–GBs of bitsets), never the seen parquet.
-        Untouched shards are carried through the cogroup unchanged."""
+        """Add the new hashes to the persisted layers. Touches only the
+        filter table (bytes proportional to the seen set), never the
+        seen parquet."""
         self._guard_shard_count()
-        spark = new.sparkSession
-        cur = self.table.read(spark)
-        m0, k0 = _params(self.expected_per_shard, self.fpp)
-
-        def or_in(new_pdf: pd.DataFrame, bloom_pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(bloom_pdf):
-                row = bloom_pdf.iloc[0]
-                bits = np.frombuffer(row["bitset"], dtype=np.uint8).copy()
-                m, k = int(row["m_bits"]), int(row["k_hashes"])
-                n_items = int(row["n_items"])
-                shard = int(row["shard"])
-            else:
-                m, k, n_items = m0, k0, 0
-                bits = np.zeros(m // 8, dtype=np.uint8)
-                shard = int(new_pdf["shard"].iloc[0])
-            if len(new_pdf):
-                pos = _positions(new_pdf["h"].to_numpy(np.int64), m, k).ravel()
-                np.bitwise_or.at(
-                    bits, (pos >> 3).astype(np.int64), (1 << (pos & 7)).astype(np.uint8)
-                )
-            return pd.DataFrame(
-                [
-                    {
-                        "shard": shard,
-                        "bitset": bits.tobytes(),
-                        "n_items": n_items + len(new_pdf),
-                        "m_bits": m,
-                        "k_hashes": k,
-                    }
-                ]
-            )
-
-        sharded = self._sharded(new, hash_col)
-        if cur is None:
-            merged = sharded.groupBy("shard").applyInPandas(
-                lambda pdf: or_in(pdf, pd.DataFrame()), _BLOOM_SCHEMA
-            )
-        else:
-            merged = (
-                sharded.groupBy("shard")
-                .cogroup(cur.groupBy("shard"))
-                .applyInPandas(or_in, _BLOOM_SCHEMA)
-            )
+        merged = self._layered(new, hash_col, self.table.read(new.sparkSession))
         m = {"num_shards": self.num_shards, **(metrics or {})}
         return self.table.overwrite(merged, metrics=m)
 
-    def max_load(self, spark: SparkSession) -> float:
-        """max over shards of n_items / sized capacity — a tiny job on
-        the num_shards-row filter table; > 1.0 means fpp has decayed
-        past target and a rebuild is due."""
-        df = self.table.read(spark)
-        if df is None:
-            return 0.0
-        top = df.agg(F.max("n_items").alias("n")).first()["n"]
-        return float(top or 0) / float(self.expected_per_shard)
-
-    def rebuild(
-        self,
-        seen: DataFrame,
-        hash_col: str = "url_hash",
-        expected_per_shard: int | None = None,
-        metrics: dict | None = None,
-    ) -> int:
+    def rebuild(self, seen: DataFrame, hash_col: str = "url_hash", metrics: dict | None = None) -> int:
         """Full rebuild from the seen table (the ONLY path that scans
-        it) — run on overload or at compaction, and after an
-        invalidation, never per wave. Without ``expected_per_shard``
-        the new capacity is sized from the actual item count with 2×
-        headroom (the rebuild scans seen anyway, so the count is free),
-        floored at double the current size so rebuilds amortize
-        geometrically; pass the current capacity to keep the geometry."""
-        if expected_per_shard is not None:
-            self.expected_per_shard = expected_per_shard
-        else:
-            n = seen.count()
-            self.expected_per_shard = max(
-                self.expected_per_shard * 2,
-                2 * (n // self.num_shards + 1),
-            )
-        built = BloomFilterTable.build(
-            seen,
-            hash_col=hash_col,
-            num_shards=self.num_shards,
-            expected_per_shard=self.expected_per_shard,
-            fpp=self.fpp,
-        )
+        it): every shard becomes one layer sized from its own seen rows,
+        as if they were its first batch. Run after an invalidation, at
+        compaction and to migrate a workdir without a filter — never
+        per wave."""
+        built = self._layered(seen, hash_col, None)
         m = {"rebuild": True, "num_shards": self.num_shards, **(metrics or {})}
-        return self.table.overwrite(built.df, metrics=m)
+        return self.table.overwrite(built, metrics=m)
 
 
 def url_seen_anti_join(

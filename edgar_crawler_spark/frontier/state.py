@@ -13,6 +13,9 @@ needs, with the same guarantees:
   the full file list, parent pointer, per-commit metrics and lineage;
   resuming = reading LATEST (kill-and-resume safe).
 * time travel      — ``read(version=k)`` reads any retained snapshot.
+* row counts       — each manifest records ``rows``, the row count of
+  its files, summed from the written parquet footers on the Spark driver
+  (None after an append onto a manifest that records none).
 * schema on read   — each manifest records the schema of the columns
   its files hold (the written ``df.schema`` minus any ``partition_by``
   columns, as parquet reads it back: all fields nullable; an append
@@ -62,6 +65,19 @@ def _as_read(dt: DataType) -> DataType:
     return dt
 
 
+def _footer_rows(path: str) -> int:
+    """Rows in the parquet files under ``path``, summed from their
+    footers on the Spark driver — no job, no data read."""
+    import pyarrow.parquet as pq
+
+    return sum(
+        pq.read_metadata(os.path.join(d, n)).num_rows
+        for d, _, names in os.walk(path)
+        for n in names
+        if n.endswith(".parquet")
+    )
+
+
 class SnapshotTable:
     def __init__(self, root: str):
         self.root = root
@@ -82,7 +98,7 @@ class SnapshotTable:
 
     def _manifest(self, version: int) -> dict:
         if version == 0:
-            return {"version": 0, "files": [], "metrics": {}, "parent": None}
+            return {"version": 0, "files": [], "metrics": {}, "parent": None, "rows": 0}
         with open(os.path.join(self._snap_dir, f"v{version:06d}.json")) as f:
             return json.load(f)
 
@@ -94,6 +110,7 @@ class SnapshotTable:
         lineage: dict,
         schema: str | None,
         partition_by: list[str],
+        rows: int | None,
     ) -> int:
         parent = self.current_version()
         prev = []
@@ -102,6 +119,10 @@ class SnapshotTable:
             prev = pm["files"]
             if prev and pm.get("schema") != schema:
                 schema = None  # the files no longer share one schema
+            if prev:
+                # unknown when the parent (written before row counts
+                # were recorded) does not know its own
+                rows = None if pm.get("rows") is None else pm["rows"] + rows
         version = parent + 1
         manifest = {
             "version": version,
@@ -112,6 +133,7 @@ class SnapshotTable:
             "lineage": lineage,
             "schema": schema,
             "partition_by": partition_by,
+            "rows": rows,
             "ts": time.time(),
         }
         mpath = os.path.join(self._snap_dir, f"v{version:06d}.json")
@@ -165,7 +187,9 @@ class SnapshotTable:
             writer = writer.partitionBy(*parts)
         writer.parquet(path)
         held = StructType([f for f in _as_read(df.schema).fields if f.name not in parts])
-        return self._commit([rel], mode, dict(metrics or {}), lineage or {}, held.json(), parts)
+        return self._commit(
+            [rel], mode, dict(metrics or {}), lineage or {}, held.json(), parts, _footer_rows(path)
+        )
 
     @staticmethod
     def _reader(spark: SparkSession, manifest: dict):
@@ -295,7 +319,13 @@ class SnapshotTable:
         m = {"rollback_to": version, **(metrics or {})}
         schema = restored.get("schema") if "partition_by" in restored else None
         return self._commit(
-            list(restored["files"]), "rollback", m, {}, schema, restored.get("partition_by", [])
+            list(restored["files"]),
+            "rollback",
+            m,
+            {},
+            schema,
+            restored.get("partition_by", []),
+            restored.get("rows"),
         )
 
     def latest_manifest(self) -> dict:

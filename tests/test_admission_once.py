@@ -130,6 +130,25 @@ def test_drained_rerun_commits_nothing(spark, tmp_path, anti_join_calls):
     _assert_log_exact(fr, N_SEEDS - N_PRIOR)
 
 
+def test_drained_rerun_starts_no_job(spark, tmp_path):
+    """A drained pending snapshot records 0 rows and a current stamp,
+    so a rerun answers from the manifest: no fetch phase, no Spark job,
+    on this frontier and on one reopened over the same workdir."""
+    fr = _frontier(spark, tmp_path)
+    assert len(fr.run()) == 1
+    assert fr.pending.latest_manifest()["rows"] == 0
+    reopened = CrawlFrontier(spark, str(tmp_path / "wd"), wave_quota=100)
+    sc = spark.sparkContext
+    sc.setJobGroup("drained-rerun", "rerun of a drained frontier")
+    try:
+        assert fr.run() == []
+        assert reopened.run() == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("drained-rerun") == []
+
+
 def _plan_node_names_since(spark, before: int) -> list[str]:
     """Operator names of every SQL execution after id ``before``."""
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
@@ -164,3 +183,46 @@ def test_anti_join_probes_each_candidate_once(spark):
     got = sorted(r.row_seq for r in url_seen_anti_join(ids, seen, bloom=bloom).collect())
     assert _plan_node_names_since(spark, before).count("FlatMapCoGroupsInPandas") == 1
     assert got == [i for i in range(600) if i % 3]
+
+
+def _file_scans_since(spark, before: int) -> int:
+    """SQL executions after id ``before`` whose parquet scan read at
+    least one file (a scan under a cache hit reads none)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    n = 0
+    for i in range(execs.size() - 1, -1, -1):
+        eid = execs.apply(i).executionId()
+        if eid <= before:
+            break
+        values = store.executionMetrics(eid)
+        nodes = store.planGraph(eid).allNodes().iterator()
+        read = False
+        while nodes.hasNext():
+            node = nodes.next()
+            if not node.name().startswith("Scan parquet"):
+                continue
+            metrics = node.metrics().iterator()
+            while metrics.hasNext():
+                m = metrics.next()
+                v = values.get(m.accumulatorId())
+                if m.name() == "number of files read" and v.isDefined() and v.get() != "0":
+                    read = True
+        n += read
+    return n
+
+
+def test_bootstrap_scans_metadata_once(spark, tmp_path):
+    """bootstrap_seen evaluates its rows once: the count, the filter
+    update and the seen append share one scan of the metadata (the
+    only parquet a bootstrap into a new workdir reads)."""
+    path = str(tmp_path / "metadata")
+    seed_index_df(spark, N_PRIOR).write.parquet(path)
+    metadata = spark.read.parquet(path)
+    fr = CrawlFrontier(spark, str(tmp_path / "wd"))
+    before = _last_execution_id(spark)
+    assert fr.bootstrap_seen(metadata) == N_PRIOR
+    assert _file_scans_since(spark, before) == 1
+    assert fr.seen_set().count() == N_PRIOR
+    assert fr.seen_filter.table.read(spark).agg(F.sum("n_items")).first()[0] == N_PRIOR

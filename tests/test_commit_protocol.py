@@ -154,18 +154,31 @@ def test_bloom_filter_superset_of_seen(spark, tmp_path):
 
 
 def test_bloom_rebuild_on_overload(spark, tmp_path):
-    """A deliberately tiny capacity overloads immediately; compact()
-    triggers the (rare, sanctioned) full rebuild with doubled size."""
+    """A filter that starts tiny grows layers instead of overloading:
+    no layer holds more than its capacity, the filter stays ⊇ seen and
+    exact, and compact() folds each shard back into one layer sized
+    from seen."""
     wd = str(tmp_path / "wd")
-    fr = CrawlFrontier(spark, wd)
-    fr.seen_filter.expected_per_shard = 2
+    fr = CrawlFrontier(spark, wd, wave_quota=5, bloom_shards=1)
+    fr.bootstrap_seen(seed_index_df(spark, 1))  # a first layer at the floor
     fr.submit(seed_index_df(spark, N))
     fr.run(max_waves=50)
-    assert fr.seen_filter.max_load(spark) > 1.0
+
+    def layers():
+        pdf = fr.seen_filter.table.read(spark).toPandas()
+        assert pdf["n_items"].sum() == fr.seen_set().count() == N
+        for r in pdf.itertuples():
+            assert r.n_items <= seen_mod._capacity(r.m_bits, r.k_hashes)
+        pf = fr.seen_filter.read_filter(spark)
+        flagged = pf.maybe_contains(fr.seen_set().select("url_hash"))
+        assert flagged.filter(~F.col("bloom_maybe_seen")).count() == 0
+        return pdf
+
+    assert len(layers()) > 1
+    assert fr.submit(seed_index_df(spark, N)) == 0
     fr.compact()
-    assert fr.seen_filter.expected_per_shard > 2
-    assert fr.seen_filter.max_load(spark) <= 1.0
-    # still exact after the rebuild
+    assert len(layers()) == 1
+    # still exact after the fold
     assert fr.submit(seed_index_df(spark, N)) == 0
 
 

@@ -68,6 +68,27 @@ def test_read_schema_equals_inference(spark, crawled, name):
     assert df.count() == spark.read.parquet(*files).count() > 0
 
 
+@pytest.mark.parametrize(
+    "name", ["seen", "pending", "log", "payload", "seenfilter", "partitioned"]
+)
+def test_manifest_rows_equal_count(spark, crawled, name):
+    table = crawled[name]
+    assert table.latest_manifest()["rows"] == table.read(spark).count()
+
+
+def test_rows_follow_appends_and_rollbacks(spark, tmp_path):
+    t = SnapshotTable(str(tmp_path / "t"))
+    t.append(spark.range(3))
+    t.append(spark.range(3, 8))
+    assert t.latest_manifest()["rows"] == 8
+    t.overwrite(spark.range(0))
+    assert t.latest_manifest()["rows"] == 0
+    t.rollback(1)
+    assert t.latest_manifest()["rows"] == 3
+    t.rollback(0)
+    assert t.latest_manifest()["rows"] == 0
+
+
 def test_reads_start_no_spark_job(spark, crawled):
     sc = spark.sparkContext
     sc.setJobGroup("snapshot-schema-read", "reads only")
