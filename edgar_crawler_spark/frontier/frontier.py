@@ -66,8 +66,31 @@ from edgar_crawler_spark.frontier.seen import (
     url_seen_anti_join,
 )
 from edgar_crawler_spark.frontier.state import SnapshotTable
+from edgar_crawler_spark.plans.pipeline import filename_col
+from edgar_crawler_spark.sources.dims import METADATA_CSV_COLUMNS
 
 PAYLOAD_COLS = ["image_id", "bytes", "w", "h", "fmt", "caption", "phash"]
+
+
+def image_id_col() -> F.Column:
+    """The key of a fetched URL's payload row: the filing's accession
+    number, taken from its canonical URL."""
+    return F.regexp_extract("canonical_url", r"/(\d{10}-\d{2}-\d{6})(?:-index\.html)?$", 1)
+
+
+def fetched_filings(log: DataFrame) -> DataFrame:
+    """The downloaded filings of a fetch log, as the reference's
+    metadata CSV lists them (SURVEY.md S8): ``state = 'fetched'`` rows
+    only (a failed URL or a retry attempt is no filing), keyed by the
+    payload's ``image_id``, the P5 filename back-filled where the crawl
+    did not fill it (download_filings.py:716-722), under the reference
+    column names (``METADATA_CSV_COLUMNS``)."""
+    fetched = log.filter(F.col("state") == "fetched")
+    fetched = fetched.withColumn("filename", F.coalesce(F.col("filename"), filename_col(fetched)))
+    return fetched.select(
+        image_id_col().alias("image_id"),
+        *[F.col(c.lower().replace(" ", "_")).alias(c) for c in METADATA_CSV_COLUMNS],
+    )
 
 
 class CrawlFrontier:
@@ -428,9 +451,7 @@ class CrawlFrontier:
         # decode/validate columns were fused into the fetch pass, so
         # this is a pure JVM projection, no second Python stage
         payload_rows = fetched.select(
-            F.regexp_extract(
-                "canonical_url", r"/(\d{10}-\d{2}-\d{6})(?:-index\.html)?$", 1
-            ).alias("image_id"),
+            image_id_col().alias("image_id"),
             "bytes", "w", "h", "fmt", "caption", "phash", "decode_ok",
         )
         # BOTH terminal dispositions enter seen (ADVICE r02): 'failed'
@@ -620,7 +641,7 @@ class CrawlFrontier:
         )
         return self.spark.createDataFrame(rows, schema)
 
-    def compact(self, target_partitions: int | None = None) -> None:
+    def compact(self) -> None:
         """Fold accumulated per-wave appends in seen/log/payload into
         single-dir snapshots (scan-planning hygiene for long crawls),
         and fold the Bloom filter's layers back into one per shard,
@@ -628,7 +649,7 @@ class CrawlFrontier:
         sanctioned full-scan rebuild besides invalidation, amortized
         into the pass that rewrites seen anyway)."""
         for table in (self.seen, self.log, self.payload):
-            table.compact(self.spark, target_partitions)
+            table.compact(self.spark)
         seen_df = self.seen.read(self.spark)
         if seen_df is not None:
             self.seen_filter.rebuild(seen_df, metrics={"compaction": True})

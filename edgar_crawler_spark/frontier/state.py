@@ -287,7 +287,7 @@ class SnapshotTable:
         df = self.read(spark, version)
         return df if df is not None else spark.createDataFrame([], schema)
 
-    def compact(self, spark: SparkSession, target_partitions: int | None = None) -> int:
+    def compact(self, spark: SparkSession) -> int:
         """Rewrite the table to one data dir (an OPTIMIZE/rewrite-files
         commit): at 10^10 scale a seen-table accumulating one appended
         dir per wave degrades scan planning — compaction folds N dirs
@@ -298,15 +298,11 @@ class SnapshotTable:
         if parts:
             raise ValueError(
                 f"{self.root} is partitioned by {parts}; compact it with its "
-                "owning index's compact() (IncrementalLSHIndex, "
-                "IncrementalHammingIndex or IncrementalIVFIndex), which keeps "
-                "the layout"
+                "owning index's compact(), which keeps the layout"
             )
         df = self.read(spark)
         if df is None:
             return self.current_version()
-        if target_partitions:
-            df = df.repartition(target_partitions)
         return self.overwrite(df, metrics={"compaction": True})
 
     def rollback(self, version: int, metrics: dict | None = None) -> int:

@@ -14,6 +14,13 @@ Scale notes (100 TB):
   explode) and one groupBy; output one long per doc.
 * jaccard   — token self-join is quadratic per token; cap token
   document-frequency (stop-token removal) before joining at scale.
+
+Persisted indexes (near-dup against everything ingested, one batch at
+a time): every index table — the LSH band table and its doc-hash twin,
+the Hamming band table, ``similarity.IncrementalIVFIndex``'s vectors —
+is a :class:`BucketedTable` (one hive layout at :data:`INDEX_BUCKETS`,
+one compaction, one pruned read), and the LSH and Hamming indexes
+share one candidate core, :func:`_bucket_candidates`.
 """
 
 from __future__ import annotations
@@ -283,21 +290,124 @@ def band_rows_from_sigs(sigs: DataFrame, k: int = MINHASH_K, bands: int = LSH_BA
     )
 
 
-# hive buckets of the persisted near-dup indexes: every commit writes
-# its rows under ``kb=<0..INDEX_BUCKETS-1>`` and an ``add`` reads only
-# the buckets its batch touches
+# the one layout of every persisted index (LSH, Hamming, IVF): each
+# commit writes its rows under ``<col>=<0..INDEX_BUCKETS-1>`` and a
+# query reads only the buckets it touches
 INDEX_BUCKETS = 16
 
 
-def _in_index_layout(table) -> bool:
-    """True when ``table`` holds no rows or its latest commit is the
-    ``kb``-bucketed layout at :data:`INDEX_BUCKETS` (stamp and manifest
-    agree)."""
-    m = table.latest_manifest()
-    return not m["files"] or (
-        (m.get("metrics") or {}).get("n_buckets") == INDEX_BUCKETS
-        and m.get("partition_by") == ["kb"]
+class BucketedTable:
+    """A snapshot table in the persisted-index layout: rows
+    hive-partitioned under ``<col>=<bucket>`` by ``bucket``, a pure
+    expression over the data columns with values in
+    ``[0, INDEX_BUCKETS)``. The bucket column is recomputed on every
+    write and never stored, so the table's data columns are all a
+    reader sees. Every commit is stamped with the bucket count plus
+    the owner's ``stamp``.
+
+    * :meth:`append` / :meth:`write` — repartition on the bucket (one
+      file per bucket per commit) and commit partitioned; ``append``
+      skips an empty batch's commit (an empty hive write creates a
+      partition-less data dir).
+    * :meth:`migrate` — on reopen, a table whose latest commit is in
+      another layout (a flat table, another bucket count) is rewritten
+      once by :meth:`compact`.
+    * :meth:`compact` — folds every commit into one data dir, keeping
+      the layout and dropping exact duplicate rows (the only trace a
+      crash-replayed append leaves, since every index row is a pure
+      function of its input).
+    * :meth:`touched` / :meth:`read` — the buckets a frame's rows hash
+      into (a ≤ INDEX_BUCKETS-row collect) and the read of only those
+      hive subdirs (directory stats, no scan); ``last_dirs`` records
+      the planned dirs."""
+
+    def __init__(self, spark, table, col: str, bucket: F.Column, stamp: dict | None = None):
+        self.spark, self.table, self.col = spark, table, col
+        self.bucket = bucket.cast("int")
+        self.stamp = {**(stamp or {}), "n_buckets": INDEX_BUCKETS}
+        self.last_dirs: list[str] | None = None
+
+    def in_layout(self) -> bool:
+        """True when the table holds no rows or its latest commit is in
+        this layout (bucket-count stamp and manifest agree)."""
+        m = self.table.latest_manifest()
+        return not m["files"] or (
+            (m.get("metrics") or {}).get("n_buckets") == INDEX_BUCKETS
+            and m.get("partition_by") == [self.col]
+        )
+
+    def migrate(self) -> None:
+        if not self.in_layout():
+            self.compact()
+
+    def write(self, mode: str, rows: DataFrame, **metrics) -> int:
+        return getattr(self.table, mode)(
+            rows.withColumn(self.col, self.bucket).repartition(INDEX_BUCKETS, self.col),
+            metrics={**metrics, **self.stamp},
+            partition_by=[self.col],
+        )
+
+    def append(self, rows: DataFrame, docs: int, **metrics) -> int | None:
+        """Commit a batch of ``docs`` input rows; None (no commit) when
+        the batch is empty."""
+        return self.write("append", rows, docs=docs, **metrics) if docs else None
+
+    def compact(self) -> int:
+        df = self.table.read(self.spark)
+        if df is None:
+            return self.table.current_version()
+        return self.write("overwrite", df.dropDuplicates(), compaction=True)
+
+    def touched(self, rows: DataFrame) -> list[int]:
+        return [r[0] for r in rows.select(self.bucket).distinct().collect()]
+
+    def read(self, buckets: list[int]) -> DataFrame | None:
+        self.last_dirs = self.table.pruned_paths(self.col, buckets)
+        return self.table.read_pruned(self.spark, self.col, buckets)
+
+
+def _xx_bucket(*cols: str) -> F.Column:
+    return F.pmod(F.xxhash64(*cols), F.lit(INDEX_BUCKETS))
+
+
+def _bucket_candidates(
+    store: BucketedTable, new_rows: DataFrame, key: str, bucket_cap: int
+) -> tuple[DataFrame, bool]:
+    """The candidate core of the banded indexes: every (a, b) row pair
+    sharing a ``(band, key)`` bucket with ``a`` in the new batch and
+    ``b`` in batch ∪ corpus, ``a.doc_id != b.doc_id``; and whether the
+    touched buckets held any corpus rows.
+
+    Only buckets the batch touches can produce pairs, so the corpus is
+    read pruned to the batch's hive buckets and semi-joined to its band
+    keys before any aggregate or join: per-batch shuffle is proportional
+    to rows in touched buckets, never to the corpus. Index rows are a
+    pure function of their doc, so a crash-replayed batch re-appends
+    exact duplicates: the corpus slice drops them, and the copies of
+    any doc that is in this batch too (its fresh rows win), which keeps
+    bucket sizes honest under the cap. ``bucket_cap`` is applied over
+    batch ∪ corpus: a bucket that outgrows it stops emitting from then
+    on (pairs already emitted are not retracted). No forced broadcast:
+    a daily slice AQE broadcasts on its own, a bulk backfill must not
+    OOM the driver."""
+    band = ["band", key]
+    old = store.read(store.touched(new_rows))
+    relevant = new_rows
+    if old is not None:
+        relevant = new_rows.unionByName(
+            old.join(new_rows.select(*band).dropDuplicates(), band, "left_semi")
+            .dropDuplicates()
+            .join(new_rows.select("doc_id").dropDuplicates(), "doc_id", "left_anti")
+        )
+    ok = (
+        relevant.groupBy(*band)
+        .agg(F.count("*").alias("__sz"))
+        .filter(F.col("__sz") <= bucket_cap)
+        .drop("__sz")
     )
+    a = new_rows.join(ok, band, "left_semi").alias("a")
+    b = relevant.join(ok, band, "left_semi").alias("b")
+    return a.join(b, band).filter(F.col("a.doc_id") != F.col("b.doc_id")), old is not None
 
 
 class IncrementalLSHIndex:
@@ -309,51 +419,39 @@ class IncrementalLSHIndex:
     exact key?', this answers 'near-duplicate of anything so far?'.
 
     State is one snapshot table of (doc_id, band, band_key) rows —
-    k/bands integers per doc, NOT the token stream — appended per
-    batch with the same crash-safe manifest commits as the frontier
-    tables. ``add(batch)`` returns every candidate pair touching the
-    batch: batch×corpus plus batch-internal, via ONE key-equality join
-    on (band, band_key); only the batch is re-signed.
-
-    ``bucket_cap`` applies at emission time over corpus∪batch: a
-    bucket that outgrows the cap stops emitting from then on (output
-    is monotone — pairs already emitted are not retracted), matching
-    the batch operator exactly whenever no bucket ever exceeds the
-    cap.
-
-    The band table is hive-partitioned by ``kb = pmod(xxhash64(band,
-    band_key), INDEX_BUCKETS)``: ``add()`` reads ONLY the partitions
-    whose kb values the batch touches (directory pruning — stat calls,
-    no scan), so per-batch corpus input is proportional to touched
-    partitions instead of the full 10^10-row index.  A small batch
-    (the production daily-slice/lookup regime) touches few partitions;
-    a bulk backfill touches all of them, which is proportional anyway.
-    The bucket count is stamped into every commit's metrics; reopening
-    a table in any other layout (an unpartitioned index, another bucket
-    count) rewrites it once through :meth:`compact`.
+    MINHASH_K/LSH_BANDS integers per doc, NOT the token stream —
+    appended per batch with the same crash-safe manifest commits as
+    the frontier tables, in the :class:`BucketedTable` layout with
+    ``kb = pmod(xxhash64(band, band_key), INDEX_BUCKETS)``. ``add(batch)``
+    re-signs only the batch and returns every candidate pair touching
+    it (batch×corpus plus batch-internal) from the shared candidate
+    core :func:`_bucket_candidates`, which reads only the kb buckets
+    the batch touches. ``bucket_cap`` matches the batch operator exactly
+    whenever no bucket ever exceeds the cap. The signature shape is the
+    module's (MINHASH_K, LSH_BANDS) and is not settable: the table does
+    not stamp it, so a reopen with another shape would compute other
+    band keys.
 
     ``min_sim`` additionally maintains a TWIN copy of the band rows
-    under ``<path>/_bydoc``, hive-partitioned by ``db =
+    under ``<path>/_bydoc`` in the same layout with ``db =
     pmod(xxhash64(doc_id), INDEX_BUCKETS)``: the dispose leg needs
     every band row of the candidate-member docs (non-matching bands
     count against the agreeing-seed estimate), and those rows scatter
-    across ALL kb partitions — a doc-hash layout puts each doc's rows
-    in exactly one partition, so the dispose read prunes to the
-    members' partitions instead of scanning the whole index.  Storage
-    doubles (still k integers per doc — nothing next to the text); the
-    twin commit is stamped with the main-table version it mirrors, and
-    a reopen whose stamps disagree (crash between the two appends, or
-    enabling ``min_sim`` on a pre-twin table) rebuilds the twin from
-    the main table — self-healing, no rollback protocol."""
+    across ALL kb buckets — a doc-hash layout puts each doc's rows in
+    exactly one bucket, so the dispose read prunes to the members'
+    buckets instead of scanning the whole index.  Storage doubles
+    (still k integers per doc — nothing next to the text); the twin
+    commit is stamped with the main-table version it mirrors, and a
+    reopen or compaction whose stamps disagree (crash between the two
+    appends, ``min_sim`` enabled on a pre-twin table, a rewritten main
+    table) rebuilds the twin from the main table — self-healing, no
+    rollback protocol."""
 
     def __init__(
         self,
         spark,
         path: str,
-        k: int = MINHASH_K,
-        bands: int = LSH_BANDS,
         bucket_cap: int = LSH_BUCKET_CAP,
-        tokenizer=tokens,
         min_sim: float | None = None,
     ):
         import os
@@ -361,59 +459,44 @@ class IncrementalLSHIndex:
         from edgar_crawler_spark.frontier.state import SnapshotTable
 
         self.spark = spark
-        self.table = SnapshotTable(path)
-        self.k, self.bands, self.bucket_cap = k, bands, bucket_cap
-        self.tokenizer = tokenizer
+        self._kb = BucketedTable(spark, SnapshotTable(path), "kb", _xx_bucket("band", "band_key"))
+        self.table = self._kb.table
+        self.bucket_cap = bucket_cap
         self.min_sim = min_sim
-        self.last_scan_dirs: list[str] | None = None  # pruning observability
-        self.last_dispose_dirs: list[str] | None = None
-        self.bydoc = (
-            SnapshotTable(os.path.join(path, "_bydoc")) if min_sim is not None else None
+        self._db = (
+            BucketedTable(spark, SnapshotTable(os.path.join(path, "_bydoc")), "db", _xx_bucket("doc_id"))
+            if min_sim is not None
+            else None
         )
-        if not _in_index_layout(self.table):
-            self.compact()  # rewrites the twin too
-        elif self.bydoc is not None:
-            main_v = self.table.current_version()
-            mirrored = int(self.bydoc.latest_metrics().get("main_version", -1))
-            if main_v and mirrored != main_v:
-                # twin behind (crash between the two appends, or min_sim
-                # newly enabled on an existing table): rebuild it from
-                # the main table — a one-time full scan, then in sync
-                self._write_twin("overwrite", self.table.read(self.spark), main_v)
+        self.bydoc = self._db.table if self._db is not None else None
+        self._kb.migrate()
+        self._sync_twin()
 
-    def _kb_col(self):
-        return F.pmod(F.xxhash64("band", "band_key"), F.lit(INDEX_BUCKETS)).cast("int")
+    @property
+    def last_scan_dirs(self) -> list[str] | None:
+        return self._kb.last_dirs
 
-    def _db_col(self):
-        return F.pmod(F.xxhash64("doc_id"), F.lit(INDEX_BUCKETS)).cast("int")
+    @property
+    def last_dispose_dirs(self) -> list[str] | None:
+        return self._db.last_dirs if self._db is not None else None
 
-    def _write_twin(self, mode: str, rows: DataFrame, main_v: int) -> None:
-        """Commit ``rows`` to the doc-hash twin, stamped with the main
-        version they mirror."""
-        getattr(self.bydoc, mode)(
-            rows.withColumn("db", self._db_col()).repartition(INDEX_BUCKETS, "db"),
-            metrics={"main_version": main_v, "n_buckets": INDEX_BUCKETS},
-            partition_by=["db"],
-        )
+    def _sync_twin(self) -> None:
+        """Rebuild the doc-hash twin from the main table (a one-time
+        full scan) unless it is in its layout and mirrors the main
+        table's current version."""
+        main_v = self.table.current_version()
+        if self._db is None or not main_v:
+            return
+        mirrored = int(self.bydoc.latest_metrics().get("main_version", -1))
+        if mirrored != main_v or not self._db.in_layout():
+            self._db.write("overwrite", self.table.read(self.spark), main_version=main_v)
 
     def compact(self) -> int:
-        """Fold the accumulated per-batch commits into one data dir —
-        same scan-planning hygiene as SnapshotTable.compact, but
-        PRESERVING the hive layout (a flat rewrite would silently hide
-        every row from the pruned reads; ``pruned_paths`` fails loudly
-        on such a mix).  ``kb`` is a pure function of (band, band_key),
-        so it is recomputed rather than stored; the same rewrite moves a
-        table in another layout to this one."""
-        df = self.table.read(self.spark)
-        if df is None:
-            return self.table.current_version()
-        v = self.table.overwrite(
-            df.withColumn("kb", self._kb_col()).repartition(INDEX_BUCKETS, "kb"),
-            metrics={"compaction": True, "n_buckets": INDEX_BUCKETS},
-            partition_by=["kb"],
-        )
-        if self.bydoc is not None:
-            self._write_twin("overwrite", df, v)
+        """Fold the per-batch commits into one data dir in the same
+        layout, replayed rows dropped (:meth:`BucketedTable.compact`),
+        and rebuild the twin from the result."""
+        v = self._kb.compact()
+        self._sync_twin()
         return v
 
     def add(self, docs: DataFrame) -> DataFrame:
@@ -421,94 +504,38 @@ class IncrementalLSHIndex:
         pairs (lexicographic order) with at least one batch member.
         The returned frame is materialized (the state append must not
         recompute through it)."""
-        new_rows = band_rows(docs, self.k, self.bands, tokenizer=self.tokenizer).persist()
-        # partition-pruned corpus read: the batch's touched kb values
-        # (≤ INDEX_BUCKETS ints — bounded driver collect), then only those
-        # hive subdirs are planned. The kb column is a pure function
-        # of (band, band_key), so the pruned read loses nothing the
-        # candidate join needs.
-        touched = [
-            r.kb for r in new_rows.select(self._kb_col().alias("kb")).distinct().collect()
-        ]
-        self.last_scan_dirs = self.table.pruned_paths("kb", touched)
-        old = self.table.read_pruned(self.spark, "kb", touched)
-        # only buckets TOUCHED by the batch can produce pairs, so the
-        # corpus is pre-filtered to the batch's bucket keys BEFORE any
-        # aggregate or join — per-batch shuffle is proportional to rows
-        # in touched buckets, never to the 10^10-row corpus (which is
-        # only ever scanned). No forced broadcast: a daily slice AQE
-        # broadcasts on its own; a bulk backfill must not OOM the
-        # driver (the inverse of the r02 mis-broadcast class).
-        # Band rows are a pure function of the doc, so rows re-appended
-        # by a crash-replayed batch are EXACT duplicates: deduping the
-        # touched slice of the DISK-BACKED side (the only place replays
-        # can land; the fresh batch is unique by construction) restores
-        # the no-crash state without any index rollback machinery.
-        new_buckets = new_rows.select("band", "band_key").dropDuplicates()
-        if old is None:
-            relevant = new_rows
-        else:
-            touched_old = (
-                old.join(new_buckets, ["band", "band_key"], "left_semi")
-                .dropDuplicates(["doc_id", "band", "band_key"])
-                # a crash-replayed doc is in BOTH the table and this
-                # batch: its fresh rows win, the stale copies drop
-                # (keeps bucket sizes honest under the cap)
-                .join(
-                    new_rows.select("doc_id").dropDuplicates(),
-                    "doc_id",
-                    "left_anti",
-                )
-            )
-            relevant = new_rows.unionByName(touched_old)
-        ok_buckets = (
-            relevant.groupBy("band", "band_key")
-            .agg(F.count("*").alias("__sz"))
-            .filter(F.col("__sz") <= self.bucket_cap)
-            .drop("__sz")
-        )
-        a = new_rows.join(ok_buckets, ["band", "band_key"], "left_semi").alias("a")
-        b = relevant.join(ok_buckets, ["band", "band_key"], "left_semi").alias("b")
-        pairs = (
-            a.join(b, on=["band", "band_key"])
-            .filter(F.col("a.doc_id") != F.col("b.doc_id"))
-            .select(
-                F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_a"),
-                F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_b"),
-            )
-            .dropDuplicates()
-        )
+        new_rows = band_rows(docs).persist()
+        cand, has_corpus = _bucket_candidates(self._kb, new_rows, "band_key", self.bucket_cap)
+        pairs = cand.select(
+            F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_a"),
+            F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_b"),
+        ).dropDuplicates()
         if self.min_sim is not None:
             # dispose step: the persisted band keys ARE the signatures
             # (rows_per_band minhashes each), so the agreeing-seed
             # Jaccard estimate reconstructs from the index itself. It
-            # needs member docs' band rows across ALL bands (non-matching
-            # bands count against the estimate), and under the kb layout
-            # a doc's rows scatter over every partition, so the doc-hash
-            # TWIN serves this leg: materialize the candidates once (they
-            # feed both the db collect and the verify join), prune the
-            # twin to the members' db partitions, and only those dirs
-            # are planned. Without corpus rows in the touched buckets
-            # every member is a batch doc, and the batch holds its rows.
-            if old is not None:
+            # needs member docs' band rows across ALL bands, which the
+            # doc-hash TWIN serves: materialize the candidates once (they
+            # feed both the db collect and the verify join), then read
+            # only the members' db buckets. Without corpus rows in the
+            # touched buckets every member is a batch doc, and the batch
+            # holds its rows.
+            if has_corpus:
                 pairs = pairs.localCheckpoint()
             members = (
                 pairs.select(F.col("doc_a").alias("doc_id"))
                 .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
                 .dropDuplicates()
             )
-            full_old = None
-            if old is not None:
-                member_db = [
-                    r.db for r in members.select(self._db_col().alias("db")).distinct().collect()
-                ]
-                self.last_dispose_dirs = self.bydoc.pruned_paths("db", member_db)
-                full_old = self.bydoc.read_pruned(self.spark, "db", member_db)
-            all_bands = new_rows if full_old is None else new_rows.unionByName(
-                full_old.dropDuplicates(["doc_id", "band", "band_key"]).join(
-                    new_rows.select("doc_id").dropDuplicates(), "doc_id", "left_anti"
-                )
-            )
+            all_bands = new_rows
+            if has_corpus:
+                full_old = self._db.read(self._db.touched(members))
+                if full_old is not None:
+                    all_bands = new_rows.unionByName(
+                        full_old.dropDuplicates().join(
+                            new_rows.select("doc_id").dropDuplicates(), "doc_id", "left_anti"
+                        )
+                    )
             mb = all_bands.join(members, "doc_id", "left_semi")
             exploded = mb.select(
                 "doc_id", "band", F.posexplode(F.split("band_key", ",")).alias("pos", "mh")
@@ -533,28 +560,14 @@ class IncrementalLSHIndex:
         # eager localCheckpoint: materialize before the state append
         # (the result must not recompute through the mutated table)
         # without handing the caller a persist() it can never release —
-        # checkpoint blocks are GC'd when the frame is dropped, so the
-        # streaming foreachBatch loop does not accumulate cache
+        # checkpoint blocks are GC'd when the frame is dropped
         pairs = pairs.localCheckpoint()
         n_docs = docs.count()
-        if n_docs == 0:
-            # nothing to ingest: no commit (an empty hive write creates
-            # a partition-less data dir; harmless now that pruned_paths
-            # skips empty commits, but pointless manifest churn)
-            new_rows.unpersist()
-            return pairs
-        # one file per touched bucket per commit: repartition on kb
-        # before the hive-partitioned write (partitionBy alone would
-        # emit shuffle_partitions × buckets small files)
-        v = self.table.append(
-            new_rows.withColumn("kb", self._kb_col()).repartition(INDEX_BUCKETS, "kb"),
-            metrics={"docs": n_docs, "n_buckets": INDEX_BUCKETS},
-            partition_by=["kb"],
-        )
-        if self.bydoc is not None:
+        v = self._kb.append(new_rows, n_docs)
+        if v is not None and self._db is not None:
             # a crash between these two commits leaves the twin's stamp
-            # behind and the next open rebuilds the twin (__init__)
-            self._write_twin("append", new_rows, v)
+            # behind and the next open rebuilds the twin (_sync_twin)
+            self._db.append(new_rows, n_docs, main_version=v)
         new_rows.unpersist()
         return pairs
 
@@ -749,28 +762,22 @@ class IncrementalHammingIndex:
     EXACT pairs (id_a, id_b, hamming ≤ max_hamming) of the batch
     against everything ingested so far plus batch-internal — never
     corpus×corpus. The image-axis twin of :class:`IncrementalLSHIndex`
-    (daily crawl slices deduped against the whole visual history),
-    with one structural simplification: the stored sketch rides along
-    in every band row, so verification is an exact ``bit_count(xor)``
-    inside the candidate join itself — no second corpus pass (the
-    MinHash index needs its agreeing-seed estimate leg; Hamming does
-    not).
+    and the same candidate core (:func:`_bucket_candidates`, keyed by
+    ``byteval``), with one structural simplification: the stored sketch
+    rides along in every band row, so verification is an exact
+    ``bit_count(xor)`` inside the candidate join itself — no second
+    corpus pass (the MinHash index needs its agreeing-seed estimate
+    leg; Hamming does not).
 
     State is (doc_id, sketch, band, byteval) rows — bands+1 banding
     per the pigeonhole guarantee of :func:`hamming_near_dup_pairs` —
     appended with the same crash-safe manifest commits as the frontier
-    tables, hive-partitioned by ``kb = pmod(xxhash64(band, byteval),
-    INDEX_BUCKETS)``: ``add()`` plans only the partitions the batch
-    touches (directory pruning, stat calls not scans).  (bits, bands)
-    and the bucket count are stamped into every commit.  A reopen with
-    another (bits, bands) raises — a mismatched banding would compute
-    different bytevals and silently miss pairs; a table in another
-    layout is rewritten once through :meth:`compact`.  ``bucket_cap``
-    is the degenerate-bucket guard (every near-black thumbnail shares
-    byteval 0): an over-cap bucket stops emitting, monotonically, same
-    contract as the LSH index.  Replayed batches (crash between the
-    caller's commit and ours) re-append byte-identical rows; the
-    touched-slice dedup in ``add`` neutralizes them exactly as in the
+    tables, in the :class:`BucketedTable` layout with ``kb =
+    pmod(xxhash64(band, byteval), INDEX_BUCKETS)``.  (bits, bands) are
+    stamped into every commit, and a reopen with another (bits, bands)
+    raises — a mismatched banding would compute different bytevals and
+    silently miss pairs.  ``bucket_cap`` is the degenerate-bucket guard
+    (every near-black thumbnail shares byteval 0), same contract as the
     LSH index."""
 
     def __init__(
@@ -792,7 +799,6 @@ class IncrementalHammingIndex:
         if self.bands <= max_hamming:
             raise ValueError("pigeonhole recall needs bands > max_hamming")
         self.bucket_cap = bucket_cap
-        self.last_scan_dirs: list[str] | None = None
         if self.table.current_version():
             m = self.table.latest_metrics()
             stamped = (int(m.get("bits", 0)), int(m.get("bands", 0)))
@@ -803,14 +809,15 @@ class IncrementalHammingIndex:
                     f"{stamped} but reopened with {mine} — a mismatched "
                     "banding would silently miss pairs"
                 )
-        if not _in_index_layout(self.table):
-            self.compact()
+        self._kb = BucketedTable(
+            spark, self.table, "kb", _xx_bucket("band", "byteval"),
+            stamp={"bits": self.bits, "bands": self.bands},
+        )
+        self._kb.migrate()
 
-    def _kb_col(self):
-        return F.pmod(F.xxhash64("band", "byteval"), F.lit(INDEX_BUCKETS)).cast("int")
-
-    def _stamp(self) -> dict:
-        return {"bits": self.bits, "bands": self.bands, "n_buckets": INDEX_BUCKETS}
+    @property
+    def last_scan_dirs(self) -> list[str] | None:
+        return self._kb.last_dirs
 
     def _band_rows(self, df: DataFrame, id_col: str, hash_col: str) -> DataFrame:
         bounds = simhash_band_bounds(self.bits, self.bands)
@@ -822,17 +829,9 @@ class IncrementalHammingIndex:
         )
 
     def compact(self) -> int:
-        """Fold per-batch commits into one data dir, preserving the
-        hive layout (same hygiene as IncrementalLSHIndex.compact; ``kb``
-        is recomputed, not stored)."""
-        df = self.table.read(self.spark)
-        if df is None:
-            return self.table.current_version()
-        return self.table.overwrite(
-            df.withColumn("kb", self._kb_col()).repartition(INDEX_BUCKETS, "kb"),
-            metrics={"compaction": True, **self._stamp()},
-            partition_by=["kb"],
-        )
+        """Fold per-batch commits into one data dir in the same layout,
+        replayed rows dropped (:meth:`BucketedTable.compact`)."""
+        return self._kb.compact()
 
     def add(
         self, df: DataFrame, id_col: str = "image_id", hash_col: str = "phash"
@@ -845,33 +844,9 @@ class IncrementalHammingIndex:
         prefix = id_col.split("_")[0] if id_col.endswith("_id") else id_col
         out_a, out_b = f"{prefix}_a", f"{prefix}_b"
         new_rows = self._band_rows(df, id_col, hash_col).persist()
-        touched = [
-            r.kb for r in new_rows.select(self._kb_col().alias("kb")).distinct().collect()
-        ]
-        self.last_scan_dirs = self.table.pruned_paths("kb", touched)
-        old = self.table.read_pruned(self.spark, "kb", touched)
-        new_buckets = new_rows.select("band", "byteval").dropDuplicates()
-        if old is None:
-            relevant = new_rows
-        else:
-            touched_old = (
-                old.join(new_buckets, ["band", "byteval"], "left_semi")
-                .dropDuplicates(["doc_id", "band", "byteval"])
-                .join(new_rows.select("doc_id").dropDuplicates(), "doc_id", "left_anti")
-            )
-            relevant = new_rows.unionByName(touched_old)
-        ok_buckets = (
-            relevant.groupBy("band", "byteval")
-            .agg(F.count("*").alias("__sz"))
-            .filter(F.col("__sz") <= self.bucket_cap)
-            .drop("__sz")
-        )
-        a = new_rows.join(ok_buckets, ["band", "byteval"], "left_semi").alias("a")
-        b = relevant.join(ok_buckets, ["band", "byteval"], "left_semi").alias("b")
+        cand, _ = _bucket_candidates(self._kb, new_rows, "byteval", self.bucket_cap)
         pairs = (
-            a.join(b, on=["band", "byteval"])
-            .filter(F.col("a.doc_id") != F.col("b.doc_id"))
-            .select(
+            cand.select(
                 F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias(out_a),
                 F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias(out_b),
                 F.bit_count(F.col("a.sketch").bitwiseXOR(F.col("b.sketch"))).alias(
@@ -881,15 +856,7 @@ class IncrementalHammingIndex:
             .filter(F.col("hamming") <= self.max_hamming)
             .dropDuplicates([out_a, out_b])
         ).localCheckpoint()
-        n_docs = df.count()
-        if n_docs == 0:
-            new_rows.unpersist()
-            return pairs
-        self.table.append(
-            new_rows.withColumn("kb", self._kb_col()).repartition(INDEX_BUCKETS, "kb"),
-            metrics={"docs": n_docs, **self._stamp()},
-            partition_by=["kb"],
-        )
+        self._kb.append(new_rows, df.count())
         new_rows.unpersist()
         return pairs
 

@@ -20,6 +20,7 @@ import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
+from edgar_crawler_spark.operators.dedup import INDEX_BUCKETS, BucketedTable
 from edgar_crawler_spark.operators.fanout import fanout
 
 #: n_cells × dim above which the literal-expression quantizer plan is
@@ -758,9 +759,11 @@ class IncrementalIVFIndex:
     this one answers 'nearest EMBEDDINGS among everything ingested'
     without rescanning the corpus per query batch).
 
-    State is one snapshot table of ``(vec_id, cell, embedding)`` rows,
-    hive-partitioned by ``kb = cell % n_buckets`` with the same
-    crash-safe manifest commits as every frontier table.  The coarse
+    State is one snapshot table of ``(vec_id, cell, embedding)`` rows in
+    the persisted-index layout of ``operators.dedup.BucketedTable``,
+    ``kb = pmod(cell, INDEX_BUCKETS)``, with the same crash-safe
+    manifest commits as every frontier table; a table written at
+    another bucket count is rewritten once on reopen.  The coarse
     quantizer (see :func:`kmeans_refine` / :func:`ivf_centroids`) is
     FROZEN at index creation: centroids live in a sibling snapshot
     table and a content hash is stamped into every vector commit —
@@ -772,8 +775,7 @@ class IncrementalIVFIndex:
       Arrow pass, no plan literals) and append partitioned.  A
       crash-replayed batch re-appends byte-identical rows (cell is a
       pure function of the vector); the serving-side ``dropDuplicates``
-      on vec_id neutralizes them, mirroring the LSH index's replay
-      story.
+      on vec_id neutralizes them, and :meth:`compact` drops them.
     * ``topk(queries, k, nprobe)`` — probe each query's ``nprobe``
       best cells, then read ONLY the partition dirs those cells hash
       into (directory stats, never a table scan) and run the standard
@@ -790,18 +792,18 @@ class IncrementalIVFIndex:
         cents: list[list[float]] | None = None,
         n_cells: int = 8,
         dim: int = 64,
-        n_buckets: int = 16,
         vec_col: str = "embedding",
     ):
-        import hashlib
         import os
 
         from edgar_crawler_spark.frontier.state import SnapshotTable
 
         self.spark = spark
         self.vec_col = vec_col
-        self.n_buckets = int(n_buckets)
         self.vectors = SnapshotTable(os.path.join(path, "vectors"))
+        self._kb = BucketedTable(
+            spark, self.vectors, "kb", F.pmod(F.col("cell"), F.lit(INDEX_BUCKETS))
+        )
         self.cent_tbl = SnapshotTable(os.path.join(path, "centroids"))
         stored = self.cent_tbl.read(spark)
         if stored is not None:
@@ -826,12 +828,7 @@ class IncrementalIVFIndex:
                 ),
                 metrics={"cent_hash": self._cent_hash(self.cents)},
             )
-        stamped = self.vectors.latest_metrics()
-        if stamped and int(stamped.get("n_buckets", self.n_buckets)) != self.n_buckets:
-            raise ValueError(
-                f"IVF index at {path} was written with n_buckets="
-                f"{stamped.get('n_buckets')} but reopened with {self.n_buckets}"
-            )
+        self._kb.migrate()
 
     @staticmethod
     def _cent_hash(cents) -> str:
@@ -845,37 +842,15 @@ class IncrementalIVFIndex:
         commit."""
         assign = assign_cells_broadcast(emb, self.cents, nprobe=1, vec_col=self.vec_col)
         slim = assign.select("vec_id", F.col("cells")[0].alias("cell"))
-        rows = (
-            emb.select("vec_id", self.vec_col)
-            .join(slim.hint("shuffle_hash"), "vec_id")
-            .withColumn("kb", F.pmod(F.col("cell"), F.lit(self.n_buckets)).cast("int"))
-            .repartition(self.n_buckets, "kb")
-        )
+        rows = emb.select("vec_id", self.vec_col).join(slim.hint("shuffle_hash"), "vec_id")
         n = emb.count()
-        if n == 0:
-            return 0  # no empty hive commits (see IncrementalLSHIndex.add)
-        self.vectors.append(
-            rows, metrics={"docs": n, "n_buckets": self.n_buckets}, partition_by=["kb"]
-        )
+        self._kb.append(rows, n)
         return n
 
     def compact(self) -> int:
-        """Fold per-batch commits into one data dir, preserving the
-        hive layout (``kb`` recomputed from the stored ``cell``
-        column); also dedups crash-replayed rows while rewriting."""
-        df = self.vectors.read(self.spark)
-        if df is None:
-            return self.vectors.current_version()
-        rows = (
-            df.dropDuplicates(["vec_id"])
-            .withColumn("kb", F.pmod(F.col("cell"), F.lit(self.n_buckets)).cast("int"))
-            .repartition(self.n_buckets, "kb")
-        )
-        return self.vectors.overwrite(
-            rows,
-            metrics={"compaction": True, "n_buckets": self.n_buckets},
-            partition_by=["kb"],
-        )
+        """Fold per-batch commits into one data dir in the same layout,
+        crash-replayed rows dropped (``BucketedTable.compact``)."""
+        return self._kb.compact()
 
     def topk(self, queries: DataFrame, k: int = 5, nprobe: int = 1) -> DataFrame:
         """Top-k ingested neighbours for each query row
@@ -902,8 +877,7 @@ class IncrementalIVFIndex:
             int(r.c)
             for r in probes.select(F.explode("cells").alias("c")).distinct().collect()
         )
-        touched = sorted({c % self.n_buckets for c in cells})
-        corpus = self.vectors.read_pruned(self.spark, "kb", touched)
+        corpus = self._kb.read(sorted({c % INDEX_BUCKETS for c in cells}))
         if corpus is None:
             return q.select(
                 "query_id",

@@ -218,7 +218,12 @@ def extract_from_frontier(
     class). Returns the newly-extracted long-form DataFrame (None when
     nothing new), already committed.
     """
-    from edgar_crawler_spark.extract.spark_extract import extract_records, items_long
+    from edgar_crawler_spark.extract.spark_extract import (
+        METADATA_COLS,
+        extract_records,
+        items_long,
+    )
+    from edgar_crawler_spark.frontier.frontier import fetched_filings
     from edgar_crawler_spark.frontier.state import SnapshotTable
     from edgar_crawler_spark.sources.raw_scan import decode_content
 
@@ -253,33 +258,16 @@ def extract_from_frontier(
     if log is None or payload is None:
         return 0
 
-    md = log.filter(F.col("state") == "fetched")
+    md = fetched_filings(log)
     if filing_types:
-        md = md.filter(F.col("type").isin(list(filing_types)))
-    md = md.withColumn("filename", F.coalesce(F.col("filename"), filename_col(md)))
+        md = md.filter(F.col("Type").isin(list(filing_types)))
     if skip_extracted:
         prev = extracted_tbl.read(spark)
         if prev is not None:
             md = md.join(
                 prev.select("filename").dropDuplicates(), "filename", "left_anti"
             )
-
-    # engine lowercase names → the kernel's reference-cased columns
-    renames = {
-        "cik": "CIK", "company": "Company", "type": "Type", "date": "Date",
-        "period_of_report": "Period of Report", "sic": "SIC",
-        "state_of_inc": "State of Inc", "state_location": "State location",
-        "fiscal_year_end": "Fiscal Year End", "html_index": "html_index",
-        "htm_file_link": "htm_file_link",
-        "complete_text_file_link": "complete_text_file_link",
-        "filename": "filename",
-    }
-    slim = md.select(
-        F.regexp_extract(
-            "canonical_url", r"/(\d{10}-\d{2}-\d{6})(?:-index\.html)?$", 1
-        ).alias("image_id"),
-        *[F.col(low).alias(ref) for low, ref in renames.items()],
-    )
+    slim = md.select("image_id", *METADATA_COLS)
     if drop_near_dups:
         # extract only near-dup cluster REPRESENTATIVES: pairs from the
         # --caption-dedup pass → components → drop non-minimum members
@@ -309,7 +297,7 @@ def extract_from_frontier(
     # decode mapInPandas is AQE-coalescible by byte size, which would
     # strangle the CPU-bound Python stage (repo rule — CLAUDE.md)
     todo = todo.repartition(spark.sparkContext.defaultParallelism * 2)
-    decoded = decode_content(todo).drop("bytes")
+    decoded = decode_content(todo)
     work = decoded.join(F.broadcast(slim), "image_id")
 
     # upper-bound count hint for the adaptive extraction partitioner:

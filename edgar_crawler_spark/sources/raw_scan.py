@@ -11,21 +11,16 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
 
-RAW_SCHEMA = StructType(
-    [StructField("path", StringType()), StructField("filename", StringType()), StructField("content", StringType())]
-)
-
 
 def decode_content(df: DataFrame, bytes_col: str = "bytes") -> DataFrame:
-    """Add a ``content`` string column decoded from raw bytes with the
-    reference's errors='backslashreplace' semantics
+    """Replace the raw ``bytes_col`` with a ``content`` string decoded
+    with the reference's errors='backslashreplace' semantics
     (extract_items.py:998-1000) — Python-codec behavior, so it runs as
     an Arrow-batched mapInPandas over (the projection of) the input.
-    All input columns pass through."""
-    from pyspark.sql.types import StructType
-
-    out_schema = StructType(df.schema.fields + [StructField("content", StringType())])
-    cols = [f.name for f in df.schema.fields]
+    The other input columns pass through; the bytes do not cross back."""
+    kept = [f for f in df.schema.fields if f.name != bytes_col]
+    out_schema = StructType(kept + [StructField("content", StringType())])
+    cols = [f.name for f in kept]
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -40,24 +35,16 @@ def decode_content(df: DataFrame, bytes_col: str = "bytes") -> DataFrame:
 
 
 def read_raw_filings(spark: SparkSession, path: str, glob: str = "*") -> DataFrame:
-    """Directory of raw filing blobs → (path, filename, content)."""
+    """Directory of raw filing blobs → (path, filename, content),
+    decoded by :func:`decode_content`."""
     binf = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", glob)
         .load(path)
-        .select("path", "content")
+        .select(
+            "path",
+            F.substring_index("path", "/", -1).alias("filename"),
+            F.col("content").alias("bytes"),
+        )
     )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "path": pdf["path"],
-                    "filename": pdf["path"].str.rsplit("/", n=1).str[-1],
-                    "content": [
-                        bytes(b).decode("utf-8", "backslashreplace") for b in pdf["content"]
-                    ],
-                }
-            )
-
-    return binf.mapInPandas(decode, RAW_SCHEMA)
+    return decode_content(binf)

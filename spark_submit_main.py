@@ -135,8 +135,9 @@ def main() -> None:
     )
     ap.add_argument(
         "--metadata-csv",
-        help="after the crawl, write the fetch log as a reference-shaped "
-        "FILINGS_METADATA.csv directory (stage-1 output parity)",
+        help="after the crawl, write the downloaded filings as a "
+        "reference-shaped FILINGS_METADATA.csv directory (stage-1 output "
+        "parity)",
     )
     ap.add_argument(
         "--raw-filings-dir",
@@ -357,50 +358,32 @@ def main() -> None:
                 w["failed"], w["urls_per_s"],
             )
 
+    filings = None
     if args.metadata_csv or args.raw_filings_dir:
+        from edgar_crawler_spark.frontier.frontier import fetched_filings
+
         log = fr.fetch_log()
-    else:
-        log = None
-    if log is not None:
-        import pyspark.sql.functions as F
+        filings = fetched_filings(log) if log is not None else None
 
-        from edgar_crawler_spark.plans.pipeline import filename_col
+    if args.metadata_csv and filings is not None:
+        from edgar_crawler_spark.sources.dims import write_metadata_csv
 
-        # P5: the frontier log keeps the seed's filename when the crawl
-        # filled it, else derives it here (stage-1 output parity)
-        log = log.withColumn("filename", F.coalesce(F.col("filename"), filename_col(log)))
-
-    if args.metadata_csv and log is not None:
-        from edgar_crawler_spark.sources.dims import (
-            METADATA_CSV_COLUMNS,
-            write_metadata_csv,
-        )
-
-        # engine column names (lowercase) → the reference's CSV headers
-        renames = {c.lower().replace(" ", "_"): c for c in METADATA_CSV_COLUMNS}
-        out = log.select(*[F.col(low).alias(ref) for low, ref in renames.items()])
-        write_metadata_csv(out, args.metadata_csv)
+        write_metadata_csv(filings, args.metadata_csv)
         report["metadata_csv"] = args.metadata_csv
 
-    if args.raw_filings_dir and log is not None:
+    if args.raw_filings_dir and filings is not None:
+        import pyspark.sql.functions as F
+
         from edgar_crawler_spark.sources.blob_sink import write_raw_filing_files
 
-        # S7 layout: fetched rows carry the P5-derived filename; the
-        # bytes live in the payload table keyed by accession. The slim
-        # (type, filename, image_id) side broadcasts; payload bytes
-        # stream — never the other way around (r02 scale bug).
-        fetched = log.filter(F.col("state") == "fetched").select(
-            "type",
-            "filename",
-            F.regexp_extract(  # MUST match the payload-commit image_id rule
-                "canonical_url", r"/(\d{10}-\d{2}-\d{6})(?:-index\.html)?$", 1
-            ).alias("image_id"),
-        )
+        # S7 layout: one {Type}/{filename} file per downloaded filing;
+        # the bytes live in the payload table keyed by image_id. The
+        # slim (type, filename, image_id) side broadcasts; payload
+        # bytes stream — never the other way around (r02 scale bug).
+        slim = filings.select(F.col("Type").alias("type"), "filename", "image_id")
         payload = fr.payload.read(spark)
         if payload is not None:
-            rows = payload.select("image_id", "bytes").join(
-                F.broadcast(fetched), "image_id"
-            )
+            rows = payload.select("image_id", "bytes").join(F.broadcast(slim), "image_id")
             write_raw_filing_files(rows, args.raw_filings_dir)
             report["raw_filings_dir"] = args.raw_filings_dir
 

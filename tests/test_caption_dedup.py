@@ -2,12 +2,15 @@
 (plans.pipeline.caption_near_dups_from_frontier + --caption-dedup)."""
 
 import json
+import os
 import subprocess
 import sys
 
 from edgar_crawler_spark.fixtures.seed_index import seed_index_df
 from edgar_crawler_spark.frontier.frontier import CrawlFrontier
 from edgar_crawler_spark.plans.pipeline import caption_near_dups_from_frontier
+
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_incremental_caption_and_phash_pairs(spark, tmp_path):
@@ -85,7 +88,7 @@ def test_caption_dedup_cli_smoke(spark, tmp_path):
             "--seed-parquet", str(tmp_path / "seeds"),
             "--caption-dedup",
         ],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=REPO_ROOT,
     )
     assert out.returncode == 0, out.stderr[-3000:]
     rep = json.loads(out.stdout.strip().splitlines()[-1])

@@ -104,10 +104,11 @@ def test_crash_between_seen_and_pending_recovers_exactly(spark, tmp_path):
 
 
 def test_bloom_incremental_no_full_rebuild(spark, tmp_path):
-    """The per-wave filter maintenance ORs in only new hashes: the
-    full-scan BloomFilterTable.build must NOT run during submit/run
-    once the filter table exists, the filter-table version advances
-    every wave, and the final dedup behavior stays exact."""
+    """The per-wave filter maintenance ORs in only new hashes: neither
+    full-scan rebuild (BloomFilterTable.build, PersistedBloomTable
+    .rebuild) may run during submit/run once the filter table exists,
+    the filter-table version advances every wave, and the final dedup
+    behavior stays exact."""
     wd = str(tmp_path / "wd")
     fr = CrawlFrontier(spark, wd, wave_quota=5)
     seed = seed_index_df(spark, N)
@@ -118,12 +119,18 @@ def test_bloom_incremental_no_full_rebuild(spark, tmp_path):
 
     builds = {"n": 0}
     orig_build = seen_mod.BloomFilterTable.build
+    orig_rebuild = seen_mod.PersistedBloomTable.rebuild
 
     def counting_build(*a, **kw):
         builds["n"] += 1
         return orig_build(*a, **kw)
 
+    def counting_rebuild(*a, **kw):
+        builds["n"] += 1
+        return orig_rebuild(*a, **kw)
+
     seen_mod.BloomFilterTable.build = staticmethod(counting_build)
+    seen_mod.PersistedBloomTable.rebuild = counting_rebuild
     try:
         # second submit of the same seed: filter is read, never rebuilt,
         # and the exact-dedup contract holds (0 admitted)
@@ -134,6 +141,7 @@ def test_bloom_incremental_no_full_rebuild(spark, tmp_path):
         assert builds["n"] == 0
     finally:
         seen_mod.BloomFilterTable.build = staticmethod(orig_build)
+        seen_mod.PersistedBloomTable.rebuild = orig_rebuild
 
     log = fr.fetch_log().toPandas()
     assert len(log) == N + 50

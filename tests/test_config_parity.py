@@ -3,6 +3,7 @@ keys drive the same worklist/filters as CLI flags, and a verbatim copy
 of the reference's own config.json loads."""
 
 import json
+import os
 import subprocess
 import sys
 
@@ -16,6 +17,8 @@ from edgar_crawler_spark.config import (
 )
 from edgar_crawler_spark.sources.dims import ticker_cik_dim
 from edgar_crawler_spark.sources.index_source import quarterly_index_worklist
+
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 REF_CONFIG = "/root/reference/config.json"
 
@@ -94,7 +97,7 @@ def test_cli_plan_only_config_vs_flags(tmp_path):
         "2023-11-15",
     ]
     out_cfg = subprocess.run(
-        base + ["--config", REF_CONFIG], capture_output=True, text=True, cwd="/root/repo"
+        base + ["--config", REF_CONFIG], capture_output=True, text=True, cwd=REPO_ROOT
     )
     assert out_cfg.returncode == 0, out_cfg.stderr[-2000:]
     plan_cfg = json.loads(out_cfg.stdout.strip().splitlines()[-1])
@@ -108,7 +111,7 @@ def test_cli_plan_only_config_vs_flags(tmp_path):
         ],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
     )
     assert out_flags.returncode == 0, out_flags.stderr[-2000:]
     plan_flags = json.loads(out_flags.stdout.strip().splitlines()[-1])

@@ -14,6 +14,8 @@ import sys
 
 import pytest
 
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _prepare_dataset(tmp_path, spark, n=12):
     from edgar_crawler_spark.fixtures.raw_documents import raw_documents_pdf
@@ -36,7 +38,7 @@ def _run(args):
         [sys.executable, "spark_submit_main.py", *args],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
     )
     assert out.returncode == 0, out.stderr[-3000:]
     return json.loads(out.stdout.strip().splitlines()[-1])
@@ -146,6 +148,43 @@ def test_crawl_to_extract_chain(spark, tmp_path):
         ]
     )
     assert rep2["selected"] == 30 and rep2["extracted"] == 30
+
+
+def test_metadata_csv_lists_only_downloaded_filings(spark, tmp_path):
+    """--metadata-csv lists the downloaded filings, like the reference's
+    FILINGS_METADATA.csv: a URL that failed (two seeds carry a malformed
+    accession, which the stub fetcher answers with 404) is not a row.
+    The CSV and the --raw-filings-dir folder hold the same filings."""
+    import pyspark.sql.functions as F
+
+    from edgar_crawler_spark.fixtures.seed_index import seed_index_df
+
+    bad = F.col("row_seq").isin(4, 9)
+    seed = seed_index_df(spark, 12, n_hosts=2, hot_host=False)
+    for c in ("html_index", "complete_text_file_link"):
+        seed = seed.withColumn(c, F.when(bad, F.regexp_replace(c, "-22-", "-2x-")).otherwise(F.col(c)))
+    seed.write.mode("overwrite").parquet(str(tmp_path / "seeds"))
+    rep = _run(
+        [
+            "--workdir", str(tmp_path / "wd"),
+            "--seed-parquet", str(tmp_path / "seeds"),
+            "--metadata-csv", str(tmp_path / "md.csv"),
+            "--raw-filings-dir", str(tmp_path / "raw"),
+        ]
+    )
+    fetched = sum(w["fetched"] for w in rep["waves"])
+    assert rep["admitted"] == 12 and fetched == 10
+    assert sum(w["failed"] for w in rep["waves"]) == 2
+
+    csv = (
+        spark.read.option("header", True).option("escape", '"')
+        .csv(str(tmp_path / "md.csv"))
+        .toPandas()
+    )
+    raw_files = {f for t in os.listdir(tmp_path / "raw") for f in os.listdir(tmp_path / "raw" / t)}
+    assert len(csv) == len(raw_files) == fetched
+    assert set(csv["filename"]) == raw_files
+    assert not any("-2x-" in link for link in csv["complete_text_file_link"])
 
 
 def test_extract_cli_table_native_workdir(spark, tmp_path):

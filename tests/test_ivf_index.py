@@ -7,6 +7,7 @@ import glob
 
 import pytest
 
+from edgar_crawler_spark.operators.dedup import INDEX_BUCKETS
 from edgar_crawler_spark.operators.similarity import (
     IncrementalIVFIndex,
     ivf_centroids,
@@ -40,17 +41,17 @@ def test_ivf_index_matches_batch_operator(spark, tmp_path):
 def test_ivf_index_prunes_partitions_and_reopens(spark, tmp_path):
     emb = _emb(spark)
     path = str(tmp_path / "ivf")
-    IncrementalIVFIndex(spark, path, n_cells=8, dim=64, n_buckets=8).add(emb)
+    IncrementalIVFIndex(spark, path, n_cells=8, dim=64).add(emb)
 
     # a fresh handle over the same path serves without re-ingesting
-    idx2 = IncrementalIVFIndex(spark, path, n_cells=8, dim=64, n_buckets=8)
+    idx2 = IncrementalIVFIndex(spark, path, n_cells=8, dim=64)
     one = emb.filter("vec_id = 7")
     out = idx2.topk(one, k=3, nprobe=1).collect()
     assert len(out) == 3 and all(r.query_id == 7 for r in out)
 
-    # nprobe=1 single query → exactly one touched bucket of 8
+    # nprobe=1 single query → exactly one touched bucket
     probes = {
-        int(c) % 8
+        int(c) % INDEX_BUCKETS
         for r in __import__(
             "edgar_crawler_spark.operators.similarity", fromlist=["assign_cells_broadcast"]
         ).assign_cells_broadcast(one, idx2.cents, nprobe=1).select("cells").collect()
@@ -69,10 +70,7 @@ def test_ivf_index_prunes_partitions_and_reopens(spark, tmp_path):
     # quantizer freeze: different centroids must fail loudly
     other = [[float(x + 1) for x in c] for c in ivf_centroids(8, 64)]
     with pytest.raises(ValueError, match="different centroids"):
-        IncrementalIVFIndex(spark, path, cents=other, n_buckets=8)
-    # bucket-count drift must fail loudly
-    with pytest.raises(ValueError, match="n_buckets"):
-        IncrementalIVFIndex(spark, path, n_cells=8, dim=64, n_buckets=4)
+        IncrementalIVFIndex(spark, path, cents=other)
 
 
 def test_ivf_index_replayed_add_is_neutralized(spark, tmp_path):
@@ -113,7 +111,7 @@ def test_ivf_index_with_trained_minibatch_quantizer(spark, tmp_path):
     emb = _emb(spark, "/root/testdata/sf0.001")
     cents, _ = kmeans_refine_minibatch(emb, iterations=2, fraction=0.5)
     path = str(tmp_path / "ivf_trained")
-    idx = IncrementalIVFIndex(spark, path, cents=cents, n_buckets=8)
+    idx = IncrementalIVFIndex(spark, path, cents=cents)
     idx.add(emb)
     qids = [r.vec_id for r in emb.select("vec_id").limit(3).collect()]
     out = idx.topk(emb.filter(f"vec_id in ({','.join(map(str, qids))})"), k=3).toPandas()
@@ -121,7 +119,7 @@ def test_ivf_index_with_trained_minibatch_quantizer(spark, tmp_path):
     assert (out.groupby("query_id").size() <= 3).all()
     assert (out.query_id != out.neighbor_id).all()
 
-    idx2 = IncrementalIVFIndex(spark, path, n_buckets=8)
+    idx2 = IncrementalIVFIndex(spark, path)
     assert idx2.cents == cents
 
 

@@ -374,9 +374,10 @@ def main():
 
 
 def ivf_index(cpus: int) -> dict:
-    """Persisted-IVF-index shape at 1M vectors, n_cells=1024,
-    n_buckets=64: ingest in 4 batches, then serve a 10-query batch and
-    report the planned-bytes pruning ratio."""
+    """Persisted-IVF-index shape at 1M vectors, n_cells=1024 over the
+    index layout's INDEX_BUCKETS hive buckets: ingest in 4 batches,
+    then serve a 10-query batch and report the planned-bytes pruning
+    ratio."""
     import glob
     import os as _os
 
@@ -408,7 +409,7 @@ def ivf_index(cpus: int) -> dict:
     n = big.count()
     cents = [[float(x) for x in c] for c in ivf_centroids(1024, 64)]
     path = tempfile.mkdtemp() + "/ivf"
-    idx = IncrementalIVFIndex(spark, path, cents=cents, n_buckets=64)
+    idx = IncrementalIVFIndex(spark, path, cents=cents)
     t0 = time.time()
     for i in range(4):
         idx.add(big.filter(F.col("vec_id") % 4 == i))
@@ -433,6 +434,7 @@ def ivf_index(cpus: int) -> dict:
         _os.path.dirname(f) for f in glob.glob(path + "/vectors/data/*/kb=*/*.parquet")
     }
     # touched partitions for this query batch (recompute like topk does)
+    from edgar_crawler_spark.operators.dedup import INDEX_BUCKETS
     from edgar_crawler_spark.operators.similarity import assign_cells_broadcast
 
     cells = sorted(
@@ -442,7 +444,7 @@ def ivf_index(cpus: int) -> dict:
         .distinct()
         .collect()
     )
-    touched = probes.pruned_paths("kb", sorted({c % 64 for c in cells}))
+    touched = probes.pruned_paths("kb", sorted({c % INDEX_BUCKETS for c in cells}))
     ratio = round(tree_bytes(touched) / max(1, tree_bytes(all_leafs)), 3)
     spark.stop()
     return {
