@@ -14,17 +14,25 @@ Scale notes: content strings are the payload — an explicit
 repartition pins parallelism for the CPU-bound Python stage (AQE
 byte-size coalescing would strangle it), and the long form is derived
 JVM-side by explode(map) so item text is shuffled at most once.
-Partitioning is size-aware (VERDICT r02 item 6): range-partition by
-descending content length (ties spread by a hash) at 4× parallelism,
-so each task holds a few similar-size docs and the biggest documents
-land in the lowest partition ids — Spark schedules those first, the
-LPT heuristic — instead of a random partition straggling with several
-giants. Cost: one sampling pass over lengths for the range bounds.
-The 4× factor and the round-robin cut-off below were tuned while every
-Python task also paid about 0.2 s of worker set-up (re-reading
-pyspark.zip, see worker_daemon.py); with that charge gone, more and
-smaller tasks cost less than the tuning assumed, so both are due for
-re-measurement.
+Partitioning is round-robin into one partition per core slot
+(``defaultParallelism``, fewer for a smaller known batch): every
+Python task pays a fixed set-up cost (about 15-20 ms of wall and 40-65
+ms of CPU on a 4-vCPU VM, whatever it holds), so fewer, larger tasks win
+until every core is busy. A range layout by descending length used to
+place the largest documents first (LPT), which only pays with about
+one document per partition; with several it put the largest ones
+together in partition 0, and its sampling pass cost two more Spark
+jobs. Round-robin spreads them instead.
+
+Memory: a task streams its partition to the Python worker in Arrow
+batches, each closed at ``spark.sql.execution.arrow.maxRecordsPerBatch``
+rows (10,000 in ``get_spark``) or once it reaches
+``spark.sql.execution.arrow.maxBytesPerBatch`` (64 MiB by default),
+whichever comes first; both bounds apply to ``mapInPandas`` input (a
+probe at 1 MiB cut 200 rows of 100 KB into batches of 11: a batch
+closes on the row that crosses the bound). The kernel holds one batch
+and its output at a time, so the byte bound, not the partition size,
+caps what a task holds.
 """
 
 from __future__ import annotations
@@ -54,58 +62,24 @@ METADATA_COLS = [
 ]
 
 
-
-
-#: below this many docs per partition the range-partitioner's extra
-#: sampling pass dominates the win from size-aware placement (measured:
-#: −32% on the 553-doc corpus at local[32], r03 driver bench, taken
-#: while each Python task paid ~0.2 s of set-up) — use
-#: plain round-robin there. Above it (every real corpus) the LPT
-#: placement wins (2→8 scaling 0.61 → 0.76, r03 BENCH/BASELINE.md).
-SIZE_PARTITION_MIN_DOCS_PER_PART = 8
-
-
-def _size_partitioned(
-    raw: DataFrame, num_partitions: int, n_docs: int | None = None
-) -> DataFrame:
-    """Size-aware repartition for the CPU-bound extraction stage: range
-    by descending length (big docs first, similar sizes together), hash
-    tie-break so equal-length runs don't collapse into one partition.
-
-    ``n_docs`` is an optional driver-known row-count hint (callers that
-    already counted the batch pass it — counting here would cost the
-    same extra pass we're avoiding): when the corpus is too small for
-    the range sampler to pay for itself, fall back to round-robin,
-    which is both faster at that size and still balanced by count."""
-    if (
-        n_docs is not None
-        and n_docs < num_partitions * SIZE_PARTITION_MIN_DOCS_PER_PART
-    ):
-        return raw.repartition(num_partitions)
-    return raw.repartitionByRange(
-        num_partitions,
-        F.length(F.col("content")).desc(),
-        F.xxhash64(F.coalesce(F.col("filename"), F.lit(""))),
-    )
-
-
 def _extract(
     raw: DataFrame,
     schema: StructType,
     encode: Callable[[dict], object],
-    items_to_extract: list[str] | None,
-    remove_tables: bool,
-    include_signature: bool,
-    num_partitions: int | None,
     n_docs: int | None,
+    **kernel_kw,
 ) -> DataFrame:
     """The one per-row loop behind both record shapes: the kernel runs
-    per filing, ``encode`` turns its record into the third column of
-    ``schema`` (inside the per-doc ``try``, so an encode failure is that
-    doc's error too), and a filing whose items all came out empty gets a
-    null value and the ``all_items_null`` error."""
-    if num_partitions is None:
-        num_partitions = raw.sparkSession.sparkContext.defaultParallelism * 4
+    per filing with ``kernel_kw``, ``encode`` turns its record into the
+    third column of ``schema`` (inside the per-doc ``try``, so an encode
+    failure is that doc's error too), and a filing whose items all came
+    out empty gets a null value and the ``all_items_null`` error. The
+    input is dealt round-robin into one partition per core slot, fewer
+    when ``n_docs`` (a driver-known upper bound on the rows) is
+    smaller."""
+    num_partitions = raw.sparkSession.sparkContext.defaultParallelism
+    if n_docs is not None:
+        num_partitions = max(1, min(num_partitions, n_docs))
     value_col = schema.fieldNames()[2]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -119,13 +93,7 @@ def _extract(
             for row in pdf.to_dict("records"):
                 md = {c: row.get(c) for c in METADATA_COLS}
                 try:
-                    rec = extract_filing(
-                        row["content"],
-                        md,
-                        items_to_extract=items_to_extract,
-                        remove_tables=remove_tables,
-                        include_signature=include_signature,
-                    )
+                    rec = extract_filing(row["content"], md, **kernel_kw)
                     out[value_col].append(encode(rec) if rec is not None else None)
                     out["error"].append(None if rec is not None else "all_items_null")
                 except Exception as e:  # poisoned doc must not kill the job
@@ -135,7 +103,7 @@ def _extract(
                 out["filing_type"].append(row.get("Type"))
             yield pd.DataFrame(out)
 
-    return _size_partitioned(raw, num_partitions, n_docs).mapInPandas(run, schema)
+    return raw.repartition(num_partitions).mapInPandas(run, schema)
 
 
 def extract_records(
@@ -143,21 +111,14 @@ def extract_records(
     items_to_extract: list[str] | None = None,
     remove_tables: bool = True,
     include_signature: bool = False,
-    num_partitions: int | None = None,
     n_docs: int | None = None,
 ) -> DataFrame:
     """Run the extraction kernel over (content + metadata) rows.
-    ``n_docs`` is an optional driver-known count hint for the adaptive
-    partitioner (see :func:`_size_partitioned`)."""
+    ``n_docs`` is an optional driver-known upper bound on the rows; it
+    caps the partition count (see :func:`_extract`)."""
     return _extract(
-        raw,
-        RECORD_SCHEMA,
-        lambda rec: rec,
-        items_to_extract,
-        remove_tables,
-        include_signature,
-        num_partitions,
-        n_docs,
+        raw, RECORD_SCHEMA, lambda rec: rec, n_docs, items_to_extract=items_to_extract,
+        remove_tables=remove_tables, include_signature=include_signature,
     )
 
 
@@ -176,7 +137,6 @@ def extract_json_records(
     items_to_extract: list[str] | None = None,
     remove_tables: bool = True,
     include_signature: bool = False,
-    num_partitions: int | None = None,
     n_docs: int | None = None,
 ) -> DataFrame:
     """Like :func:`extract_records` but emits the record pre-serialized
@@ -189,14 +149,9 @@ def extract_json_records(
     empty (the reference skips writing in that case,
     extract_items.py:1143-1145)."""
     return _extract(
-        raw,
-        JSON_RECORD_SCHEMA,
-        functools.partial(json.dumps, indent=4, ensure_ascii=False),
-        items_to_extract,
-        remove_tables,
-        include_signature,
-        num_partitions,
-        n_docs,
+        raw, JSON_RECORD_SCHEMA, functools.partial(json.dumps, indent=4, ensure_ascii=False),
+        n_docs, items_to_extract=items_to_extract, remove_tables=remove_tables,
+        include_signature=include_signature,
     )
 
 

@@ -281,8 +281,9 @@ class CrawlFrontier:
         crash-recovery idempotent. Returns (pending, whether it was
         re-filtered); pending is None when there is nothing to run,
         including a drained snapshot (0 rows recorded, stamp current),
-        which is answered from its manifest without a Spark job. The
-        persisted Bloom pre-filter keeps this exact (maybe → exact
+        which is answered from its manifest without a Spark job (one
+        behind seen needs a new stamp only, and counts as re-filtered).
+        The persisted Bloom pre-filter keeps this exact (maybe → exact
         recheck) while the definitely-new bulk skips the seen scan;
         filter ⊇ seen (commit protocol step 2-before-3) guarantees no
         false negative can re-admit a fetched URL."""
@@ -292,8 +293,8 @@ class CrawlFrontier:
         stamped = self._seen_stamp(pm) == seen_v
         if pending is None or (stamped and pm.get("rows") == 0):
             return None, False
-        if stamped:
-            return pending, False
+        if stamped or pm.get("rows") == 0:
+            return pending, not stamped
         seen_df = self.seen.read(self.spark, seen_v)
         if seen_df is not None:
             pending = url_seen_anti_join(
@@ -301,14 +302,13 @@ class CrawlFrontier:
             )
         return pending, True
 
-    def _clear_pending(self, deferred: DataFrame) -> None:
-        """Overwrite pending with the undispatched rows of a wave that
-        fetched nothing; they were filtered against the current seen."""
-        self.pending.overwrite(
-            deferred, metrics={"seen_version": self.seen.current_version()}
-        )
+    def _clear_pending(self, rest) -> None:
+        """Overwrite pending with the undispatched rows (or only their
+        schema) of a run that fetched nothing; they were filtered
+        against the current seen."""
+        self.pending.overwrite(rest, metrics={"seen_version": self.seen.current_version()})
 
-    def _dispatch_predicate(self, work: DataFrame):
+    def _dispatch_predicate(self, work: DataFrame, n_rows: int | None):
         """The wave-membership predicate over the prioritized frontier.
 
         Base rule: per-host quota (``host_rank <= wave_quota``) — the
@@ -332,15 +332,25 @@ class CrawlFrontier:
 
         Excess rows spill to ``deferred`` (the predicate's complement),
         exactly as quota overflow always has.
+
+        Returns (predicate, rows it defers or None if unknown). A
+        frontier of known size ``n_rows`` that fits both caps goes whole
+        with no collect; the rank counts lump ranks past the quota into
+        one group, so their collect counts the frontier too.
         """
         pred = F.col("host_rank") <= self.wave_quota
+        if n_rows is not None and n_rows <= min(self.wave_quota, self.max_wave_rows or n_rows):
+            return pred, 0
         if not self.max_wave_rows:
-            return pred
-        # cumulative rows per rank depth: ≤ wave_quota rows to the driver
+            return pred, None
+        # cumulative rows per rank depth: ≤ wave_quota + 1 rows to the driver
+        depth_col = F.least(F.col("host_rank"), F.lit(self.wave_quota + 1))
         counts = sorted(
-            work.filter(pred).groupBy("host_rank").agg(F.count("*").alias("n")).collect(),
+            work.groupBy(depth_col.alias("host_rank")).agg(F.count("*").alias("n")).collect(),
             key=lambda r: r["host_rank"],
         )
+        total = sum(r["n"] for r in counts)
+        counts = [r for r in counts if r["host_rank"] <= self.wave_quota]
         cum, depth = 0, 0
         for r in counts:
             if cum + r["n"] > self.max_wave_rows:
@@ -348,7 +358,7 @@ class CrawlFrontier:
             cum += r["n"]
             depth = r["host_rank"]
         if depth >= 1:
-            return F.col("host_rank") <= depth
+            return F.col("host_rank") <= depth, total - cum
         # hosts alone exceed the cap: rotate through counted host buckets
         n_rank1 = counts[0]["n"] if counts else 1
         n_buckets = max(8, -(-4 * n_rank1 // self.max_wave_rows))  # ceil
@@ -373,18 +383,20 @@ class CrawlFrontier:
             cum += nb
             if cum >= self.max_wave_rows:
                 break
-        return (F.col("host_rank") == 1) & bucket.isin(chosen)
+        return (F.col("host_rank") == 1) & bucket.isin(chosen), total - cum
 
-    def _fetch_phase(self, pending: DataFrame) -> dict:
+    def _fetch_phase(self, pending: DataFrame, n_rows: int | None = None) -> dict:
         """Prioritize, split dispatch/deferred, run the fetch, and
         materialize per-state counts. Returns the wave context dict
-        (results/work stay persisted until the caller releases them)."""
+        (results/work stay persisted until the caller releases them);
+        ``n_remaining`` counts the rows it leaves pending (deferred plus
+        retries), None when unknown."""
         # cache the prioritized frontier: the window shuffle feeds BOTH
         # the dispatch slice and the deferred remainder — without the
         # cache the deferred side re-scans pending and re-runs the
         # window when the next-pending snapshot is written
         work = with_priority(pending).persist()
-        dispatch_pred = self._dispatch_predicate(work)
+        dispatch_pred, n_deferred = self._dispatch_predicate(work, n_rows)
         dispatch = work.filter(dispatch_pred)
         deferred = work.filter(~dispatch_pred).drop(
             "form_type_rank", "priority", "host_rank"
@@ -421,11 +433,14 @@ class CrawlFrontier:
             ]
         )
         next_pending = deferred.select(pending_cols).unionByName(retry_rows)
+        n_remaining = None if n_deferred is None else n_deferred + state_counts.get("retry", 0)
         return {
             "work": work,
             "results": results,
-            "deferred": deferred,
-            "next_pending": next_pending,
+            # only the schema when no row is left: it commits without a
+            # Spark job (SnapshotTable.overwrite)
+            "next_pending": next_pending.schema if n_remaining == 0 else next_pending,
+            "n_remaining": n_remaining,
             "state_counts": state_counts,
             "n_dispatched": n_dispatched,
             "wall": wall,
@@ -545,6 +560,11 @@ class CrawlFrontier:
         instead of a silent re-fetch that could diverge from what was
         committed.
 
+        Where the driver knows the remainder's row count (the pending
+        manifest's ``rows``, then per wave: rows − dispatched + retries),
+        the wave that leaves 0 rows is the last: no fetch phase follows,
+        and its commit writes the empty pending as a manifest alone.
+
         A run that dispatches nothing rewrites pending only when its
         read re-filtered it (seen moved past the snapshot's stamp); a
         drained, stamped frontier commits nothing and, when its pending
@@ -553,14 +573,21 @@ class CrawlFrontier:
 
         eager = self._eager_checkpoint()
         out: list[dict] = []
+        rows = self.pending.latest_manifest().get("rows")
         pending, refiltered = self._refiltered_pending()
+        # a re-filter may drop rows, so only an empty count survives it
+        n_rows = None if refiltered and rows else rows
+        if n_rows == 0:
+            if refiltered:  # seen moved past an empty snapshot: restamp it
+                self._clear_pending(pending.schema)
+            return out
         commit_fut = None
         prev_ctx = None
         with ThreadPoolExecutor(max_workers=1) as commit_pool:
             for _ in range(max_waves):
                 if pending is None:
                     break
-                ctx = self._fetch_phase(pending)
+                ctx = self._fetch_phase(pending, n_rows)
                 # wave N's commits (if any) ran while the fetch above
                 # executed; barrier on them before committing this wave
                 if commit_fut is not None:
@@ -575,13 +602,18 @@ class CrawlFrontier:
                     # already holds it; only a re-filtered read can
                     # leave stale rows to clear
                     if not out and refiltered:
-                        self._clear_pending(ctx["deferred"])
+                        self._clear_pending(ctx["next_pending"])
                     ctx["results"].unpersist()
                     ctx["work"].unpersist()
                     commit_fut, prev_ctx = None, None
                     break
                 self.last_wave += 1
                 wave_no = self.last_wave
+                n_rows = ctx["n_remaining"]
+                if n_rows == 0:  # nothing left to chain: the last wave
+                    commit_fut = commit_pool.submit(self._commit_phase, wave_no, ctx)
+                    prev_ctx, pending = ctx, None
+                    continue
                 # chain in-memory: fetched rows are already excluded
                 # from next_pending by the state split. localCheckpoint
                 # truncates the logical plan at the wave boundary —

@@ -13,6 +13,9 @@ needs, with the same guarantees:
   the full file list, parent pointer, per-commit metrics and lineage;
   resuming = reading LATEST (kill-and-resume safe).
 * time travel      — ``read(version=k)`` reads any retained snapshot.
+* empty snapshots  — ``overwrite(schema)`` commits a manifest with no
+  files and ``rows`` 0, without a Spark job, for a writer that already
+  knows it has no rows; ``read`` returns an empty DataFrame for it.
 * row counts       — each manifest records ``rows``, the row count of
   its files, summed from the written parquet footers on the Spark driver
   (None after an append onto a manifest that records none).
@@ -164,15 +167,22 @@ class SnapshotTable:
 
     def overwrite(
         self,
-        df: DataFrame,
+        df: DataFrame | StructType,
         metrics: dict | None = None,
         lineage: dict | None = None,
         partition_by: list[str] | None = None,
     ) -> int:
+        """Replace the table's rows with ``df``'s; a bare schema in place
+        of ``df`` empties the table (see the module docstring)."""
         return self._write(df, "overwrite", metrics, lineage, partition_by)
 
-    def _write(self, df: DataFrame, mode: str, metrics, lineage, partition_by=None) -> int:
+    def _write(
+        self, df: DataFrame | StructType, mode: str, metrics, lineage, partition_by=None
+    ) -> int:
         parts = list(partition_by or [])
+        if isinstance(df, StructType):  # no rows: the manifest alone
+            held = _as_read(df).json()
+            return self._commit([], mode, dict(metrics or {}), lineage or {}, held, parts, 0)
         if mode == "append":
             pm = self.latest_manifest()
             if pm["files"] and pm.get("partition_by", parts) != parts:
@@ -206,11 +216,14 @@ class SnapshotTable:
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame | None:
         """Every row of snapshot ``version`` (default: the latest), data
         columns only; None when the table has no committed snapshot
-        yet."""
+        yet. A snapshot emptied by ``overwrite(schema)`` reads as an
+        empty DataFrame of that schema."""
         v = self.current_version() if version is None else version
         m = self._manifest(v)
         if not m["files"]:
-            return None
+            if m.get("schema") is None:
+                return None
+            return spark.createDataFrame([], StructType.fromJson(json.loads(m["schema"])))
         return self._reader(spark, m).parquet(*[os.path.join(self.root, f) for f in m["files"]])
 
     def pruned_paths(self, column: str, values: list) -> list[str]:

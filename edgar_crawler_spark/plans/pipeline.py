@@ -300,10 +300,9 @@ def extract_from_frontier(
     decoded = decode_content(todo)
     work = decoded.join(F.broadcast(slim), "image_id")
 
-    # upper-bound count hint for the adaptive extraction partitioner:
-    # metadata-only (no bytes, no Python) so the count is cheap, and
-    # incremental stage-2 batches are usually small enough that the
-    # range-sampler's extra pass would dominate
+    # upper-bound row count for the extraction stage, which caps its
+    # partitions at one per document: metadata-only (no bytes, no
+    # Python), so the count is cheap
     n_work = slim.count()
     records = extract_records(
         work,

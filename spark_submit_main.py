@@ -565,8 +565,8 @@ def run_extract_stage(spark, args, ex_cfg, runlog=None) -> None:
         items_to_extract=ex_cfg.get("items_to_extract") or None,
         remove_tables=ex_cfg["remove_tables"],
         include_signature=ex_cfg["include_signature"],
-        # upper-bound count hint (already computed for logging): lets the
-        # adaptive partitioner skip the range-sampling pass on small runs
+        # upper-bound row count (already computed for logging): a run
+        # smaller than the core count gets one partition per filing
         n_docs=n_todo if ex_cfg["skip_extracted_filings"] else n_selected,
     ).persist()
     n_written = records.filter(F.col("json").isNotNull()).count()

@@ -75,3 +75,49 @@ def test_spark_long_form(spark, docs):
     assert any(k.startswith("part_1_item_") for k in keys)
     errs = recs.filter("error is not null").count()
     assert errs == 0
+
+
+@pytest.mark.parametrize("n", [3, 144])
+def test_json_records_one_task_per_core(spark, tmp_path, n):
+    """extract_json_records deals n minted filings round-robin into
+    min(defaultParallelism, n) partitions, one extraction task each,
+    with no sampling job before them (a write is the shuffle-map job
+    and the write job), and the files equal in-process extraction byte
+    for byte. 144 is the whole minted corpus, mixed sizes and forms."""
+    import json
+    import os
+
+    import pandas as pd
+
+    from edgar_crawler_spark.extract.spark_extract import METADATA_COLS, extract_json_records
+    from edgar_crawler_spark.fixtures.filing_corpus import CORPUS_SIZES, corpus_entry
+    from edgar_crawler_spark.sources.blob_sink import write_filing_json_files
+
+    entries = [corpus_entry(f, i) for f in CORPUS_SIZES for i in range(CORPUS_SIZES[f])][:: 144 // n][:n]
+    df = spark.createDataFrame(pd.DataFrame([dict(e["metadata"], content=e["content"]) for e in entries]))
+    out = str(tmp_path / "out")
+    sc = spark.sparkContext
+    group = f"extract-json-{n}"
+    sc.setJobGroup(group, "extract_json_records write")
+    try:
+        write_filing_json_files(extract_json_records(df, n_docs=n), out)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sorted(sc.statusTracker().getJobIdsForGroup(group))
+    assert len(jobs) == 2
+    last_stage = max(sc.statusTracker().getJobInfo(jobs[-1]).stageIds)
+    assert sc.statusTracker().getStageInfo(last_stage).numTasks == min(sc.defaultParallelism, n)
+
+    written = {os.path.join(d, f) for d, _, fs in os.walk(out) for f in fs}
+    expected = set()
+    for e in entries:
+        md = e["metadata"]
+        rec = extract_filing(e["content"], {c: md.get(c) for c in METADATA_COLS}, remove_tables=True)
+        if rec is None:
+            continue
+        path = os.path.join(out, md["Type"], md["filename"].split(".")[0] + ".json")
+        expected.add(path)
+        with open(path, encoding="utf-8") as f:
+            assert f.read() == json.dumps(rec, indent=4, ensure_ascii=False), path
+    assert written == expected and len(expected) > n // 2
