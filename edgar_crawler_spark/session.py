@@ -2,9 +2,10 @@
 
 Tuned for the local[N] sandbox but with every knob chosen for the
 1000-executor / 100 TB target: AQE on (runtime re-plan + skew-join
-splitting), adaptive shuffle-partition coalescing, Arrow enabled for
-all pandas-UDF traffic, and a broadcast threshold sized for the small
-dimension tables this engine joins (ticker→cik, company-info).
+splitting), adaptive shuffle-partition coalescing (persisted plans
+included), Arrow enabled for all pandas-UDF traffic, and a broadcast
+threshold sized for the small dimension tables this engine joins
+(ticker→cik, company-info).
 """
 
 from __future__ import annotations
@@ -62,6 +63,13 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # ... and the coalescing reaches the last stage of a persisted
+        # plan. Off (Spark's default), a cached frame keeps every one of
+        # spark.sql.shuffle.partitions, so the frontier's per-wave caches
+        # (prioritized frontier, fetch results, admitted seeds) fed every
+        # tally and commit write that many tasks and files however few
+        # rows a wave held.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         # Arrow for every pandas UDF / mapInPandas batch handoff.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
@@ -78,7 +86,8 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         # Fork Python workers from a daemon that stops each task from
         # re-reading pyspark.zip (about 0.2 s of CPU per task before
-        # CPython 3.13); see edgar_crawler_spark/worker_daemon.py.
+        # CPython 3.13) and imports pandas and pyarrow once, before it
+        # forks; see edgar_crawler_spark/worker_daemon.py.
         .config("spark.python.daemon.module", "edgar_crawler_spark.worker_daemon")
     )
     for k, v in (extra_conf or {}).items():

@@ -1,4 +1,5 @@
-"""PySpark worker daemon that keeps zipimport directory caches across tasks.
+"""PySpark worker daemon that keeps zipimport directory caches across tasks
+and imports pandas and pyarrow once, before it forks.
 
 Spark starts every Python worker by forking it from a daemon process
 (``spark.python.daemon.module``, default ``pyspark.daemon``), and the
@@ -23,16 +24,30 @@ sink, for one).  :func:`edgar_crawler_spark.session.get_spark` points
 
 CPython 3.13 made ``invalidate_caches`` lazy, so there the guard is not
 installed.
+
+The daemon also imports pandas and pyarrow before its first fork
+(:data:`PRELOAD`).  ``pyspark.worker`` imports them inside each worker,
+on that worker's first pandas or Arrow task: about 0.4 s of CPU per
+worker process, paid again by every worker a stage forks when it needs
+more than the pool holds.  Imported in the daemon, they reach every
+worker through the fork.
 """
 
 from __future__ import annotations
 
+import importlib
 import os
 import sys
 import zipimport
 
 #: attribute a guarded importer keeps the stat key of its last read in
 _READ_KEY = "_edgar_read_key"
+
+#: modules the daemon imports before it forks a worker
+PRELOAD = ("pandas", "pyarrow")
+
+#: the :data:`PRELOAD` modules this process imported (set by :func:`preload`)
+preloaded: tuple[str, ...] = ()
 
 
 def _archive_key(archive: str) -> tuple[int, int, int] | None:
@@ -71,8 +86,18 @@ def install_zip_cache_guard() -> bool:
     return True
 
 
+def preload() -> None:
+    """Import the :data:`PRELOAD` modules and record them in
+    :data:`preloaded`."""
+    global preloaded
+    for name in PRELOAD:
+        importlib.import_module(name)
+    preloaded = PRELOAD
+
+
 def main() -> None:
     install_zip_cache_guard()
+    preload()
     from pyspark.daemon import manager
 
     manager()

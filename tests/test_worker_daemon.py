@@ -1,8 +1,9 @@
 """The worker daemon's zipimport guard: an unchanged archive is read once
 per importer however often ``importlib.invalidate_caches()`` runs, a
 rewritten archive is read again, and ``get_spark`` sessions fork their
-Python workers from the daemon (and size the driver heap from the
-host's memory)."""
+Python workers from the daemon, which imported pandas and pyarrow before
+the fork (and size the driver heap from the host's memory, and let AQE
+coalesce the last stage of a persisted plan)."""
 
 import importlib
 import os
@@ -116,3 +117,36 @@ def test_get_spark_workers_run_under_the_daemon(spark):
             mem_kib = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
         heap = spark.sparkContext.getConf().get("spark.driver.memory")
         assert heap.endswith("m") and int(heap[:-1]) * 1024 <= mem_kib / 4
+
+
+def test_workers_fork_with_pandas_and_pyarrow_imported(spark):
+    import pandas as pd
+
+    def probe(batches):
+        import sys
+
+        daemon = sys.modules.get("edgar_crawler_spark.worker_daemon")
+        for pdf in batches:
+            yield pd.DataFrame({"preloaded": [",".join(daemon.preloaded) if daemon else None] * len(pdf)})
+
+    rows = spark.range(0, 64, numPartitions=8).mapInPandas(probe, "preloaded string").distinct().collect()
+    assert [r["preloaded"] for r in rows] == ["pandas,pyarrow"]
+
+
+def test_tiny_wave_commits_one_file_per_table(spark, tmp_path):
+    """The frontier persists each wave's fetch results; AQE sizes their
+    partitions from the rows, so a 40-row wave commits one parquet file
+    to each table, not one per shuffle partition."""
+    from edgar_crawler_spark.fixtures.seed_index import seed_index_df
+    from edgar_crawler_spark.frontier.frontier import CrawlFrontier
+
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) > 1
+    fr = CrawlFrontier(spark, str(tmp_path / "w"))
+    fr.submit(seed_index_df(spark, 40, n_hosts=8, hot_host=False))
+    assert fr.run()
+    for tbl in (fr.pending, fr.log, fr.payload, fr.seen):
+        dirs = {f for m in tbl.history() for f in m["files"]}
+        assert dirs, tbl.root
+        for d in dirs:
+            parts = [n for n in os.listdir(os.path.join(tbl.root, d)) if n.endswith(".parquet")]
+            assert len(parts) <= 1, (d, parts)
